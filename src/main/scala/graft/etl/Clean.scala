@@ -16,9 +16,16 @@ import org.apache.spark.sql.functions._
   * reproducing the reference's `isNaN(new Date(...))` gate
   * (src/lib/randomuser.js:105-111) without tripping ANSI mode.
   *
-  * Dedup (A6): `dropDuplicates` on the coalesced id key — a hash
-  * shuffle-and-first per key. At scale this is one exchange on the key; no
-  * driver materialization.
+  * Dedup (A6): one row per coalesced id key, kept whole — the key's
+  * `first(struct(<all columns>))`, unpacked again. Fixed-width-buffer rule:
+  * Spark runs an aggregate on `HashAggregateExec` only when every buffer is
+  * fixed-width. A kept row is variable-width, so this is a key-sorted
+  * `SortAggregateExec` in any form; the form decides how many buffers the
+  * sorts on both sides of the shuffle carry. `dropDuplicates` keeps a
+  * `first()` buffer plus a `valueSet` flag per column (fourteen for the
+  * seven user columns); the struct form keeps one of each, and since the
+  * kept row is one value its fields cannot come from different input rows.
+  * At scale this is one exchange on the key; no driver materialization.
   */
 object Clean {
 
@@ -33,10 +40,9 @@ object Clean {
 
   /** Validity filter + exact dedup on the row key. */
   def apply(df: DataFrame): DataFrame = {
-    // dropDuplicates needs a top-level column; derive, dedup, drop.
     validity(df)
-      .withColumn("__key", col(keyCol))
-      .dropDuplicates("__key")
-      .drop("__key")
+      .groupBy(col(keyCol))
+      .agg(first(struct(col("*"))).as("r"))
+      .select("r.*")
   }
 }

@@ -3,16 +3,27 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** A1–A8 — the analytics stage: every run metric in ONE distributed pass.
+/** A1–A8 — the analytics stage: the whole run-metric record over the raw
+  * input, with no keyed sort anywhere in its plan.
   *
   * Reference: `buildMetrics(users)` computes count, two distinct counts and
   * a rounded average in a single sequential forEach
-  * (src/lib/randomuser.js:70-123). The Spark shape is one `agg(...)` call —
-  * a single HashAggregate (partial per partition + final merge), so the
-  * "one pass" property survives distribution. The declared-but-faked
-  * metrics (rows_in/rows_out/dedup_removed/lastUser — etl.json:4-9) are
-  * folded into the same pass via conditional aggregates over flag columns,
-  * so the whole metric record costs exactly one scan of the raw input.
+  * (src/lib/randomuser.js:70-123). The declared-but-faked metrics
+  * (rows_in/rows_out/dedup_removed/lastUser — etl.json:4-9) are real
+  * aggregates here.
+  *
+  * Fixed-width-buffer rule: Spark runs an aggregate on `HashAggregateExec`
+  * only when every aggregation buffer is fixed-width; one variable-width
+  * buffer (the string inside A7's `max(struct(ts, name))`) turns the whole
+  * aggregate into a `SortAggregateExec`. In a single `agg(...)` that buffer
+  * drags the distinct counts' RewriteDistinctAggregates Expand (one copy of
+  * every row per distinct group) through two sorts keyed by the distinct
+  * columns. So the record is two 1-row aggregates, cross-joined:
+  *  - a keyless aggregate holding the variable-width buffer (count, avg,
+  *    the struct max) — a keyless `SortAggregateExec` does not sort;
+  *  - the three `count_distinct`s, whose buffers are all counts, so their
+  *    Expand stays on `HashAggregateExec`.
+  * Each side is a column-pruned scan of the raw input.
   */
 object Metrics {
 
@@ -22,9 +33,9 @@ object Metrics {
   def yearsSince(ts: Column): Column =
     year(current_date()) - year(ts)
 
-  /** The full SURVEY §2.9 metric record as a single-row DataFrame, computed
-    * in one aggregate over the *raw* (pre-clean) users so rows_in and
-    * rows_out come from the same scan.
+  /** The full SURVEY §2.9 metric record as a single-row DataFrame over the
+    * *raw* (pre-clean) users, so rows_in and rows_out describe the same
+    * input.
     *
     * Column semantics:
     *  - rows_in   = raw count                       (A6, etl.json:4)
@@ -35,8 +46,7 @@ object Metrics {
     *  - avgRegistrationYears = round(avg,2) over valid timestamps
     *                                                (A4, randomuser.js:105-121)
     *  - lastUser = name of most recently registered (A7, etl.json:9),
-    *    tie-broken by name for determinism, via max(struct(ts,name)) —
-    *    still inside the same single aggregate.
+    *    tie-broken by name for determinism, via max(struct(ts,name)).
     */
   def compute(raw: DataFrame): DataFrame = {
     val ts = try_to_timestamp(col("registered.date"))
@@ -44,26 +54,21 @@ object Metrics {
       col("id.value").isNotNull && col("email").isNotNull && ts.isNotNull
     val fullName =
       concat_ws(" ", col("name.first"), col("name.last"))
-    raw
-      .select(
-        col("id.value").as("key"),
-        col("location.country").as("country"),
-        col("location.city").as("city"),
-        ts.as("ts"),
-        valid.as("valid"),
-        fullName.as("full_name")
-      )
-      .agg(
-        count(lit(1)).as("rows_in"),
-        count_distinct(when(col("valid"), col("key"))).as("rows_out"),
-        count_distinct(col("country")).as("countries"),
-        count_distinct(col("city")).as("uniqueCities"),
-        coalesce(round(avg(yearsSince(col("ts"))), 2), lit(0.0))
-          .as("avgRegistrationYears"),
-        max(struct(col("ts"), col("full_name")))
-          .getField("full_name")
-          .as("lastUser")
-      )
+    val totals = raw.agg(
+      count(lit(1)).as("rows_in"),
+      coalesce(round(avg(yearsSince(ts)), 2), lit(0.0))
+        .as("avgRegistrationYears"),
+      max(struct(ts.as("ts"), fullName.as("full_name")))
+        .getField("full_name")
+        .as("lastUser")
+    )
+    val distincts = raw.agg(
+      count_distinct(when(valid, col("id.value"))).as("rows_out"),
+      count_distinct(col("location.country")).as("countries"),
+      count_distinct(col("location.city")).as("uniqueCities")
+    )
+    totals
+      .crossJoin(distincts)
       .select(
         col("rows_in"),
         col("rows_out"),

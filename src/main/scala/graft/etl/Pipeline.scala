@@ -100,7 +100,7 @@ object Pipeline {
       else HttpUserSource.load(spark)
     logs += LogLine(now(), "Extract", s"source=${src.sourceUrl} fallback=${src.fallbackUsed}")
 
-    // Transform (+ the single-pass metric record over the raw input)
+    // Transform (+ the metric record over the raw input)
     val cleaned = Clean(src.users)
     val metricsRow = Metrics.compute(src.users).collect()(0)
     logs += LogLine(

@@ -2,16 +2,15 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.Row
+
 import graft.etl.{Clean, Metrics}
 import graft.model.{User, UserId, UserLocation, UserName, UserPicture, UserRegistered}
 
-/** Property-style invariants for the clean/metrics stage over randomized
-  * dirty corpora (missing keys/emails, invalid dates, duplicate keys —
-  * FIXTURES.md A4), across several fixed seeds.
-  */
-class CleanPropertySpec extends SparkSpecBase {
+/** The randomized dirty corpus generator, shared with MetricsEquivalenceSpec. */
+object CleanPropertySpec {
 
-  private def genCorpus(seed: Long, n: Int): Seq[User] = {
+  def genCorpus(seed: Long, n: Int): Seq[User] = {
     val rnd = new Random(seed)
     (0 until n).map { _ =>
       val key = if (rnd.nextInt(5) == 0) null else "id-" + rnd.nextInt(30)
@@ -37,6 +36,15 @@ class CleanPropertySpec extends SparkSpecBase {
       )
     }
   }
+}
+
+/** Property-style invariants for the clean/metrics stage over randomized
+  * dirty corpora (missing keys/emails, invalid dates, duplicate keys —
+  * FIXTURES.md A4), across several fixed seeds.
+  */
+class CleanPropertySpec extends SparkSpecBase {
+
+  import CleanPropertySpec.genCorpus
 
   test("rows_out + dedup_removed == rows_in for arbitrary dirty corpora") {
     val session = spark
@@ -52,6 +60,34 @@ class CleanPropertySpec extends SparkSpecBase {
       assert(out + removed == in, s"seed $seed")
       assert(Clean(df).count() == out, s"seed $seed: agg vs operator path")
       assert(m.getAs[Long]("countries") <= in, s"seed $seed")
+    }
+  }
+
+  test("Clean keeps one whole input row per distinct valid key") {
+    val session = spark
+    import session.implicits._
+    for (seed <- 1L to 5L) {
+      // Every row gets its own name, phone and thumbnail, so a kept row
+      // assembled from fields of two input rows matches no input row.
+      val users = genCorpus(seed, 60).zipWithIndex.map { case (u, i) =>
+        u.copy(
+          name = UserName("F" + i, "L" + i),
+          phone = "555-" + i,
+          picture = UserPicture("t" + i)
+        )
+      }
+      val df = users.toDF()
+      val validRows = Clean.validity(df).collect()
+      val out = Clean(df).collect()
+      val key = (r: Row) => r.getStruct(0).getString(0)
+      val byKey = validRows.groupBy(key)
+      assert(out.map(key).toSet == byKey.keySet, s"seed $seed: key set")
+      assert(out.length == byKey.size, s"seed $seed: one row per key")
+      out.foreach { r =>
+        assert(byKey(key(r)).contains(r), s"seed $seed: $r is no input row of its key")
+      }
+      val rowsOut = Metrics.compute(df).collect()(0).getAs[Long]("rows_out")
+      assert(out.length == rowsOut, s"seed $seed: Clean vs rows_out")
     }
   }
 
