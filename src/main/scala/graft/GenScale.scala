@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator (dev harness, not driver contract):
@@ -50,15 +50,8 @@ object GenScale {
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(t: String): Boolean = only.forall(_.contains(t))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

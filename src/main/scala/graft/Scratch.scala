@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch profiling main (not part of the driver contract). */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.local(cpus)
     if (args.headOption.contains("names")) {
       // print every registered query name (sweep batching reads this —
       // the authoritative list is SparkEntry.queries, not a source grep)
@@ -67,280 +59,6 @@ object Scratch {
       val k = graft.operators.RangeJoin.tuneKnobs(iv, "s", "e")
       println(f"[tune] ${(System.nanoTime() - t0) / 1e9}%.3f s  $k  " +
         f"(width=${k.bucketWidth / 60e6}%.2f min)")
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("probe")) {
-      // stage-by-stage timing of the dedup text pipeline (dev only)
-      import org.apache.spark.sql.functions._
-      graft.functions.SketchExpressions.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"), col("text"))
-      val stages: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-        "read" -> docs,
-        "split" -> docs.withColumn("ws", split(col("text"), " ")).select("doc_id", "ws"),
-        "wordhash" -> docs.withColumn("ws", split(col("text"), " "))
-          .withColumn("wh", expr("transform(ws, w -> char_rolling_hash(w))"))
-          .select("doc_id", "wh"),
-        "hash" -> docs.withColumn("ws", split(col("text"), " "))
-          .withColumn("wh", expr("transform(ws, w -> char_rolling_hash(w))"))
-          .withColumn("hs", expr(s"array_distinct(${graft.functions.TextFeatures.hashedNgramsSpark("wh", 3)})"))
-          .select("doc_id", "hs")
-      )
-      // mirror of the current d_ngram pipeline (identity-agg barrier →
-      // explode → df → rare postings → self-join → distinct)
-      val sets = stages.last._2.repartition(32, col("doc_id")).localCheckpoint()
-      val ex = sets.select(col("doc_id"), explode(col("hs")).as("s"))
-      val dfq = ex.groupBy("s").agg(count(lit(1)).as("c"))
-      val rare = ex.join(dfq.filter(col("c") <= 10), "s")
-      val sj = rare
-        .select(col("s"), col("doc_id").as("doc_a"))
-        .join(rare.select(col("s"), col("doc_id").as("doc_b")).hint("shuffle_hash"), "s")
-        .filter(col("doc_a") < col("doc_b"))
-      val cand = sj.select("doc_a", "doc_b").distinct()
-      val a = sets.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-      val b = sets.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))
-      val ver = cand.join(a, "doc_a").join(b, "doc_b")
-        .withColumn("i", size(array_intersect(col("hs_a"), col("hs_b"))))
-        .select("doc_a", "doc_b", "i")
-      val joinStages = Seq("sets" -> sets, "ex" -> ex, "df" -> dfq, "rare" -> rare,
-        "selfjoin" -> sj, "cand" -> cand, "verify" -> ver)
-      for ((nm, df) <- stages ++ joinStages; rep <- 1 to 2) {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[probe] $nm rep$rep: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("prprobe")) {
-      // phase timing of o_pagerank_copurchase's build actions (dev only)
-      import org.apache.spark.sql.functions._
-      val Scale = 1000000000000L
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[prprobe] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      for (rep <- 1 to 2) {
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select(col("l_orderkey"), col("l_partkey"))
-        val pairs = t(s"rep$rep pairs-checkpoint") {
-          li.groupBy(col("l_orderkey"))
-            .agg(collect_set(col("l_partkey")).as("ps"))
-            .select(explode(expr(
-              "flatten(transform(ps, a -> transform(filter(ps, b -> a < b), b -> struct(a AS pa, b AS pb))))")).as("p"))
-            .select(col("p.pa").as("pa"), col("p.pb").as("pb"))
-            .distinct()
-            .localCheckpoint()
-        }
-        println(s"[prprobe] rep$rep n_pairs=${pairs.count()}")
-        val adj = t(s"rep$rep adj-checkpoint") {
-          pairs.select(col("pa").as("u"), col("pb").as("v"))
-            .unionAll(pairs.select(col("pb").as("u"), col("pa").as("v")))
-            .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("u"))
-            .localCheckpoint()
-        }
-        val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-        var ranks = t(s"rep$rep ranks-init") {
-          deg.crossJoin(broadcast(nNodes))
-            .select(col("u").as("id"), col("deg"),
-              expr(s"${Scale}L div n_nodes").as("r"),
-              expr(s"(15 * (${Scale}L div n_nodes)) div 100").as("base"))
-            .localCheckpoint()
-        }
-        for (i <- 1 to 3) {
-          val msgs = adj
-            .join(
-              ranks.select(col("id"), expr("r div deg").as("c")).hint("shuffle_hash"),
-              adj("u") === col("id"))
-            .groupBy(adj("v").as("mid")).agg(sum(col("c")).as("m"))
-          val upd = ranks.join(msgs.hint("shuffle_hash"), ranks("id") === msgs("mid"))
-            .select(col("id"), col("deg"), expr("base + (85 * m) div 100").as("r"), col("base"))
-          if (rep == 2 && i == 1) {
-            println(s"===== o_pagerank_copurchase iteration plan =====")
-            upd.explain("formatted")
-          }
-          ranks = t(s"rep$rep iter$i") { upd.localCheckpoint() }
-        }
-        t(s"rep$rep final") {
-          ranks.select(col("id").as("part_id"), col("deg"), col("r").as("rank_e12"))
-            .orderBy(col("rank_e12").desc, col("part_id").asc).limit(20)
-            .write.format("noop").mode("overwrite").save()
-        }
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("prprobe2")) {
-      // phase timing of the r14 REGISTERED o_pagerank_copurchase build
-      // (directed inline expansion + u-partitioned distinct) vs prprobe's
-      // old undirected-pairs shape (dev only)
-      import org.apache.spark.sql.functions._
-      val Scale = 1000000000000L
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[prprobe2] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      for (rep <- 1 to 2) {
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select(col("l_orderkey"), col("l_partkey"))
-        val adj = t(s"rep$rep adj-checkpoint") {
-          li.groupBy(col("l_orderkey"))
-            .agg(collect_set(col("l_partkey")).as("ps"))
-            .select(explode(expr(
-              "flatten(transform(ps, a -> transform(filter(ps, b -> b != a), b -> struct(a AS u, b AS v))))")).as("p"))
-            .select(col("p.u").as("u"), col("p.v").as("v"))
-            .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("u"))
-            .distinct()
-            .localCheckpoint()
-        }
-        println(s"[prprobe2] rep$rep n_adj=${adj.count()}")
-        val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-        var ranks = t(s"rep$rep ranks-init") {
-          deg.crossJoin(broadcast(nNodes))
-            .select(col("u").as("id"), col("deg"),
-              expr(s"${Scale}L div n_nodes").as("r"),
-              expr(s"(15 * (${Scale}L div n_nodes)) div 100").as("base"))
-            .localCheckpoint()
-        }
-        for (i <- 1 to 3) {
-          val msgs = adj
-            .join(
-              ranks.select(col("id"), expr("r div deg").as("c")).hint("shuffle_hash"),
-              adj("u") === col("id"))
-            .groupBy(adj("v").as("mid")).agg(sum(col("c")).as("m"))
-          val upd = ranks.join(msgs.hint("shuffle_hash"), ranks("id") === msgs("mid"))
-            .select(col("id"), col("deg"), expr("base + (85 * m) div 100").as("r"), col("base"))
-          ranks = t(s"rep$rep iter$i") { upd.localCheckpoint() }
-        }
-        t(s"rep$rep final") {
-          ranks.select(col("id").as("part_id"), col("deg"), col("r").as("rank_e12"))
-            .orderBy(col("rank_e12").desc, col("part_id").asc).limit(20)
-            .write.format("noop").mode("overwrite").save()
-        }
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("ppprobe")) {
-      // phase timing of o_pareto_frontier's build actions (dev only)
-      import org.apache.spark.sql.functions._
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[ppprobe] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
-      for (rep <- 1 to 2) {
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select(
-          cents(col("l_extendedprice")).as("pc"),
-          cents(col("l_quantity")).as("qc"))
-        val pairCounts = li.groupBy(col("pc"), col("qc")).agg(count(lit(1)).as("n"))
-        t(s"rep$rep pairCounts-noop") {
-          pairCounts.write.format("noop").mode("overwrite").save()
-        }
-        val pcMin = pairCounts
-          .groupBy(col("pc"))
-          .agg(min(struct(col("qc"), col("n"))).as("b"))
-          .select(col("pc"), col("b.qc").as("mq"), col("b.n").as("n"))
-        t(s"rep$rep pcMin-noop") {
-          pcMin.write.format("noop").mode("overwrite").save()
-        }
-        val probs = (1 until 32).map(i => (i.toDouble / 32).toString).mkString(", ")
-        t(s"rep$rep percentile-bounds-noop") {
-          pcMin.agg(expr(s"percentile(pc, array($probs))").as("bs"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        val bounds = pcMin.agg(expr(s"percentile(pc, array($probs))").as("bs"))
-        t(s"rep$rep bucketed-checkpoint") {
-          pcMin
-            .crossJoin(broadcast(bounds))
-            .select(col("pc"), col("mq"), col("n"),
-              expr("CAST(aggregate(bs, 0, (acc, b) -> acc + IF(pc > b, 1, 0)) AS BIGINT)").as("bkt"))
-            .localCheckpoint()
-        }
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("deconprobe")) {
-      // phase timing of the decontamination pipeline (dev only):
-      // replicates TextQueries.contaminatedTrainTest + ngramHashes
-      import org.apache.spark.sql.functions._
-      graft.functions.SketchExpressions.register(spark)
-      graft.functions.BloomFunctions.register(spark)
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[deconprobe] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      def ngramHashes(df: org.apache.spark.sql.DataFrame, idCol: String) =
-        df.withColumn("ws", split(col("text"), " "))
-          .withColumn("g", expr(
-            "array_distinct(flatten(transform(array(transform(ws, w -> char_rolling_hash(w))), " +
-              s"wh -> ${graft.functions.TextFeatures.hashedNgramsSpark("wh", 8)})))"))
-          .select(col("doc_id").as(idCol), explode(col("g")).as("h"))
-      for (rep <- 1 to 2) {
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        val test0 = docs.filter(col("doc_id") % 50 === 0)
-        val plant = docs
-          .filter(col("doc_id") % 50 =!= 0 && col("doc_id") % 9 === 0)
-          .join(
-            broadcast(test0.select(col("doc_id").as("t_id"), col("text").as("t_text"))),
-            col("t_id") === col("doc_id") % 10 * 50)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" "),
-              expr("array_join(slice(split(t_text, ' '), 1, 12), ' ')")).as("ptext"))
-        val train = docs
-          .filter(col("doc_id") % 50 =!= 0)
-          .join(plant, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("ptext"), col("text")).as("text"))
-          .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
-        t(s"rep$rep train-noop")(noop(train))
-        val trainNg = ngramHashes(train, "train_doc_id")
-        t(s"rep$rep trainNg-noop")(noop(trainNg))
-        val testNg = ngramHashes(test0, "test_doc_id")
-        t(s"rep$rep testNg-noop")(noop(testNg))
-        t(s"rep$rep join-noop")(noop(
-          trainNg.join(broadcast(testNg), "h")
-            .groupBy(col("train_doc_id"), col("test_doc_id"))
-            .agg(count(lit(1)).as("n_shared_ngrams"))
-            .orderBy(col("train_doc_id"), col("test_doc_id"))))
-        t(s"rep$rep bloomagg-noop")(noop(
-          testNg.agg(expr("graft_bloom_agg(xxhash64(h), CAST(4000000 AS BIGINT))"))))
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("mediaprobe")) {
-      // phase timing of the codec tier: encode pass vs decode passes (dev only)
-      import org.apache.spark.sql.functions._
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[mediaprobe] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      for (rep <- 1 to 2) {
-        val blobs = graft.multimodal.Media.blobs(spark, sfDir)
-        t(s"rep$rep blobs-encode-noop")(noop(blobs.toDF()))
-        t(s"rep$rep features-noop")(
-          noop(graft.multimodal.Media.extractFeatures(blobs).toDF()))
-        t(s"rep$rep features-ordered-noop")(
-          noop(graft.multimodal.Media.extractFeatures(blobs).toDF().orderBy("media_id")))
-        t(s"rep$rep resize-noop")(
-          noop(graft.multimodal.Media.resizePool(blobs).toDF()))
-      }
       spark.stop()
       return
     }

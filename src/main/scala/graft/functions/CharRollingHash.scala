@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,6 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB where this runs once per shingle. This version is a single
   * O(n) loop over the UTF8String bytes with no allocation, and
   * `doGenCode` keeps it inside whole-stage codegen.
+  *
+  * Query code builds it with `SketchExpressions.charRollingHash(col)`;
+  * SQL reaches it by its `prettyName` through
+  * `SketchExpressions.registrations`.
   */
 case class CharRollingHash(child: Expression) extends UnaryExpression {
 
@@ -58,18 +60,4 @@ case class CharRollingHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "char_rolling_hash"
-}
-
-object CharRollingHash {
-
-  /** Idempotent session registration — makes `char_rolling_hash(col)`
-    * available to `expr(...)`/SQL. (Also injectable cluster-wide via
-    * `GraftExtensions` + `spark.sql.extensions`.)
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("char_rolling_hash"),
-      new ExpressionInfo(classOf[CharRollingHash].getName, "char_rolling_hash"),
-      (children: Seq[Expression]) => CharRollingHash(children.head)
-    )
 }

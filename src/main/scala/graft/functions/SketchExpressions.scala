@@ -1,11 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.graft.shims.{column, expression}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native sketch expressions over a BIGINT-array of token hashes.
   *
@@ -214,12 +217,12 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   override def prettyName: String = "vec_dot"
 }
 
-/** Fused word-hash + n-gram-fold: `word_ngram_hashes(ws, n)` over an
+/** Fused word-hash + n-gram-fold: `wordNgramHashes(ws, n)` over an
   * ARRAY<STRING> of words ≡ the builtin-lambda composition
   * `transform(sequence(...), i -> aggregate(slice(transform(ws, w ->
-  * char_rolling_hash(w)), i, n), 0L, (acc, h) -> (acc·31 + h) mod P))`
+  * charRollingHash(w)), i, n), 0L, (acc, h) -> (acc·31 + h) mod P))`
   * with the short-doc fallback (size < n → one whole-array fold; empty
-  * → [0]) — TextFeatures.hashedNgramsSpark semantics, proven bit-equal
+  * → [0]) — the test reference DedupReference.hashedNgramsSpark, proven bit-equal
   * in NgramHashSpec (the DuckDB oracle mirrors the lambda form).
   *
   * Why (r14 OPTIMIZATION, guide step "eliminate non-codegen expressions
@@ -241,7 +244,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   */
 case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
 
-  require(n >= 1, s"word_ngram_hashes: n must be >= 1, got $n")
+  require(n >= 1, s"$prettyName: n must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
@@ -342,7 +345,7 @@ case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 /** Occurrence count of a tiny literal string set inside an ARRAY<STRING>:
-  * `count_in_set(ws, array('the', 'a', ...))` ≡ the builtin-lambda form
+  * `countInSet(ws, Seq("the", "a", ...))` ≡ the builtin-lambda form
   * `size(filter(ws, t -> array_contains(array(...), t)))` — proven
   * element-for-element in CountInSetSpec (the DuckDB oracle mirrors the
   * lambda form).
@@ -360,11 +363,18 @@ case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
   * ELEMENT is dropped, not counted (array_contains(set, null) is null,
   * and filter keeps only predicate-TRUE elements). Result is INT, as
   * size() returns.
+  *
+  * The set is an immutable `IndexedSeq`, so two calls with equal sets
+  * are equal expressions (an `Array` field would compare by reference
+  * and defeat common-subexpression elimination, exchange/subquery reuse
+  * and cache lookups); the loops read an array copy of it.
   */
-case class CountInSet(child: Expression, set: Array[org.apache.spark.unsafe.types.UTF8String])
+case class CountInSet(child: Expression, set: IndexedSeq[UTF8String])
     extends UnaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  @transient private lazy val setArr: Array[UTF8String] = set.toArray
+
+  override def dataType: DataType = IntegerType
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
@@ -375,8 +385,8 @@ case class CountInSet(child: Expression, set: Array[org.apache.spark.unsafe.type
       if (!arr.isNullAt(k)) {
         val s = arr.getUTF8String(k)
         var i = 0
-        while (i < set.length) {
-          if (set(i).equals(s)) { cnt += 1; i = set.length }
+        while (i < setArr.length) {
+          if (setArr(i).equals(s)) { cnt += 1; i = setArr.length }
           else i += 1
         }
       }
@@ -395,7 +405,7 @@ case class CountInSet(child: Expression, set: Array[org.apache.spark.unsafe.type
         val i = ctx.freshName("i")
         val s = ctx.freshName("s")
         val setRef = ctx.addReferenceObj(
-          "countInSet", set, "org.apache.spark.unsafe.types.UTF8String[]")
+          "countInSet", setArr, "org.apache.spark.unsafe.types.UTF8String[]")
         s"""
            |int $cnt = 0;
            |for (int $k = 0; $k < $c.numElements(); $k++) {
@@ -417,52 +427,97 @@ case class CountInSet(child: Expression, set: Array[org.apache.spark.unsafe.type
   override def prettyName: String = "count_in_set"
 }
 
+
+/** The engine's native expressions, two ways in.
+  *
+  * Query code calls the typed constructors: each wraps the expression
+  * around its argument columns, so a plan never looks a function up by
+  * name and needs no registration in the session that runs it.
+  *
+  * SQL callers (`expr(...)`, `spark.sql`) resolve the same expressions by
+  * name through [[registrations]], the one list of
+  * `(identifier, info, builder)` triples; `graft.plans.GraftExtensions`
+  * injects it into every session built with
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (as
+  * `graft.GraftSession` does).
+  *
+  * `bloomAgg`/`mightContain` expose Spark's runtime-filter bloom
+  * expressions, which Catalyst uses for its own AQE runtime filters but
+  * does not register, for an EXPLICIT semi-join prune: build a bloom over
+  * the selective build side, drop fact rows that cannot join before the
+  * fact shuffle:
+  * {{{
+  *   fact.filter(mightContain(sel.agg(bloomAgg(xxhash64(k), est)).scalar(), xxhash64(fk)))
+  * }}}
+  * The prune is sound for inner joins: a bloom has no false negatives,
+  * and the real join that must follow it drops the false positives.
+  */
 object SketchExpressions {
 
-  /** Idempotent registration of all native text/sketch expressions. */
-  def register(spark: SparkSession): Unit = {
-    CharRollingHash.register(spark)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children.head)
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (children: Seq[Expression]) => SimHash32(children.head)
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children(0), children(1))
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("word_ngram_hashes"),
-      new ExpressionInfo(classOf[WordNgramHashes].getName, "word_ngram_hashes"),
-      (children: Seq[Expression]) =>
-        children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) =>
-            WordNgramHashes(children(0), n)
+  def charRollingHash(c: Column): Column = column(CharRollingHash(expression(c)))
+
+  def minhashSig(c: Column): Column = column(MinHashSig(expression(c)))
+
+  def simhash32(c: Column): Column = column(SimHash32(expression(c)))
+
+  def vecDot(a: Column, b: Column): Column = column(VecDot(expression(a), expression(b)))
+
+  def wordNgramHashes(ws: Column, n: Int): Column = column(WordNgramHashes(expression(ws), n))
+
+  def countInSet(ws: Column, set: Seq[String]): Column =
+    column(CountInSet(expression(ws), set.map(UTF8String.fromString).toIndexedSeq))
+
+  /** Bloom filter (BINARY) over a BIGINT column, sized for `est` items
+    * at 8 bits each, as the SQL form's two-argument builder sizes it (the
+    * `Long` constructor would size for a target false-positive rate).
+    */
+  def bloomAgg(c: Column, est: Long): Column =
+    column(new BloomFilterAggregate(expression(c), Literal(est)).toAggregateExpression())
+
+  /** False only when `c` is certainly absent from the bloom `bf` (a
+    * scalar subquery or a literal).
+    */
+  def mightContain(bf: Column, c: Column): Column =
+    column(BloomFilterMightContain(expression(bf), expression(c)))
+
+  private def fn(name: String, cls: Class[_])(builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Every SQL name, with the checks a SQL argument list needs and the
+    * typed constructors get from their signatures.
+    */
+  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      fn("char_rolling_hash", classOf[CharRollingHash])(c => CharRollingHash(c.head)),
+      fn("minhash_sig", classOf[MinHashSig])(c => MinHashSig(c.head)),
+      fn("simhash32", classOf[SimHash32])(c => SimHash32(c.head)),
+      fn("vec_dot", classOf[VecDot])(c => VecDot(c(0), c(1))),
+      fn("word_ngram_hashes", classOf[WordNgramHashes])(c =>
+        c(1) match {
+          case Literal(n: Int, _) => WordNgramHashes(c(0), n)
           case other =>
             throw new IllegalArgumentException(
               s"word_ngram_hashes: n must be an INT literal, got $other")
-        }
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("count_in_set"),
-      new ExpressionInfo(classOf[CountInSet].getName, "count_in_set"),
-      (children: Seq[Expression]) => {
-        val setExpr = children(1)
+        }),
+      fn("count_in_set", classOf[CountInSet]) { c =>
+        val setExpr = c(1)
         require(setExpr.foldable,
           s"count_in_set: the set must be a literal string array, got $setExpr")
         val arr = setExpr.eval().asInstanceOf[ArrayData]
         val set = (0 until arr.numElements()).map { i =>
           require(!arr.isNullAt(i), "count_in_set: set elements must be non-null")
           arr.getUTF8String(i).clone()
-        }.toArray
-        CountInSet(children.head, set)
-      }
+        }
+        CountInSet(c.head, set)
+      },
+      fn("graft_bloom_agg", classOf[BloomFilterAggregate]) {
+        case Seq(c) => new BloomFilterAggregate(c)
+        case Seq(c, est) => new BloomFilterAggregate(c, est)
+        case other =>
+          throw new IllegalArgumentException(
+            s"graft_bloom_agg expects 1 or 2 args, got ${other.size}")
+      },
+      fn("graft_might_contain", classOf[BloomFilterMightContain])(c =>
+        BloomFilterMightContain(c(0), c(1)))
     )
-  }
 }

@@ -56,18 +56,13 @@ object TextFeatures {
   def ngramsDuck(ws: String, n: Int): String =
     s"CASE WHEN len($ws) < $n THEN [array_to_string($ws, ' ')] ELSE [array_to_string(($ws)[i:i+${n - 1}], ' ') for i in range(1, len($ws) - ${n - 2})] END"
 
-  /** Spark: word n-gram hashes computed NUMERICALLY from a word-hash
+  /** DuckDB: word n-gram hashes computed NUMERICALLY from a word-hash
     * array column `wh` (each word char-hashed once upstream): n-gram
-    * hash = fold (acc·31 + wordHash) mod P over the n-window. String-free
-    * — no per-shingle string allocation and ~n× less char hashing than
-    * hashing concatenated shingle strings; values < 2^30 so acc·31 + h
-    * stays far from Long overflow. Short docs (< n words) fall back to
-    * one whole-document n-gram, mirroring [[ngramsSpark]].
+    * hash = fold (acc·31 + wordHash) mod P over the n-window; short docs
+    * (< n words) fall back to one whole-document n-gram. Mirrors the
+    * native `wordNgramHashes` (the Spark lambda form it is proven
+    * bit-equal to is the test reference `DedupReference.hashedNgramsSpark`).
     */
-  def hashedNgramsSpark(wh: String, n: Int): String =
-    s"CASE WHEN size($wh) < $n THEN array(aggregate($wh, CAST(0 AS BIGINT), (acc, h) -> (acc * 31 + h) % $P)) ELSE transform(sequence(1, size($wh) - ${n - 1}), i -> aggregate(slice($wh, i, $n), CAST(0 AS BIGINT), (acc, h) -> (acc * 31 + h) % $P)) END"
-
-  /** DuckDB mirror of [[hashedNgramsSpark]]. */
   def hashedNgramsDuck(wh: String, n: Int): String =
     s"CASE WHEN len($wh) < $n THEN [list_reduce(list_prepend(CAST(0 AS BIGINT), $wh), (acc, h) -> (acc * 31 + h) % $P)] ELSE [list_reduce(list_prepend(CAST(0 AS BIGINT), ($wh)[i:i+${n - 1}]), (acc, h) -> (acc * 31 + h) % $P) for i in range(1, len($wh) - ${n - 2})] END"
 

@@ -1,53 +1,18 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CharRollingHash, MinHashSig, SimHash32, VecDot}
+import graft.functions.SketchExpressions
 
 /** Session-extension entry point: `--conf
-  * spark.sql.extensions=graft.plans.GraftExtensions` registers the
-  * engine's native expressions cluster-wide (every session, every
-  * executor) without per-session registration calls.
+  * spark.sql.extensions=graft.plans.GraftExtensions` (which
+  * `graft.GraftSession` sets) gives every session the engine's SQL
+  * function names — all of `SketchExpressions.registrations`, the one
+  * list. Query code needs none of them: it builds native expressions
+  * through the typed constructors, and `GroupedTopK.topK` adds its
+  * planner strategy to whichever session it runs in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        FunctionIdentifier("char_rolling_hash"),
-        new ExpressionInfo(classOf[CharRollingHash].getName, "char_rolling_hash"),
-        (children: Seq[Expression]) => CharRollingHash(children.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-        (children: Seq[Expression]) => MinHashSig(children.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("simhash32"),
-        new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-        (children: Seq[Expression]) => SimHash32(children.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-        (children: Seq[Expression]) => VecDot(children(0), children(1))
-      )
-    )
-    // Spark's internal runtime-filter bloom expressions, exposed for
-    // explicit fact-side semi-join pruning (see BloomFunctions for the
-    // soundness contract; per-session path = BloomFunctions.register —
-    // both paths register the SAME triples, hoisted there per ADVICE r5).
-    graft.functions.BloomFunctions.registrations.foreach(ext.injectFunction)
-    // the GroupedTopK physical strategy, cluster-wide (GroupedTopK.topK
-    // also self-registers per-session for extension-less deployments)
-    ext.injectPlannerStrategy(_ => new GroupedTopKStrategy)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    SketchExpressions.registrations.foreach(ext.injectFunction)
 }

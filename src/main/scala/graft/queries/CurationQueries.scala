@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFeatures.{charHashDuck, hashedNgramsDuck, hashedNgramsSpark}
+import graft.functions.SketchExpressions.{charRollingHash, countInSet, wordNgramHashes}
+import graft.functions.TextFeatures.{charHashDuck, hashedNgramsDuck}
 import graft.plans.GroupedTopK
 
 /** Corpus-curation suite over `documents` — the selection/retrieval side
@@ -97,7 +98,6 @@ object CurationQueries {
     // is the OOM risk, same reasoning as t_boilerplate_chunks); output
     // is O(#sources).
     "t_span_dedup" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       val docs = table(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
       val planted = docs
         .filter(col("doc_id") % 11 === 0)
@@ -108,10 +108,10 @@ object CurationQueries {
         )
       val spans = docs
         .unionAll(planted)
-        // r14: fused codegen n-gram hashing (word_ngram_hashes replaces
+        // r14: fused codegen n-gram hashing (wordNgramHashes replaces
         // the let-bound transform/aggregate lambda chain — see
         // hashedSetsOf's scaladoc and NgramHashSpec's bit-equality proof)
-        .withColumn("g", expr("array_distinct(word_ngram_hashes(split(text, ' '), 8))"))
+        .withColumn("g", array_distinct(wordNgramHashes(split(col("text"), " "), 8)))
         .select(col("doc_id"), col("source"), explode(col("g")).as("h"))
         // TWO consumers (span-df agg + per-doc join) and the span hashing
         // is the dominant per-row cost — materialize once, partitioned on
@@ -144,16 +144,15 @@ object CurationQueries {
     // Deterministic weighted sampling without replacement: per source,
     // the 5 docs with the smallest priority key u/w (priority-sampling
     // form of Efraimidis-Spirakis), where u is a hash-derived uniform
-    // (char_rolling_hash mod 1000003 — content-keyed, so the sample is
+    // (charRollingHash mod 1000003 — content-keyed, so the sample is
     // reproducible across runs AND engines) and w = n_chars: longer docs
     // are proportionally likelier. key_e6 = u·1e6 div n_chars keeps the
     // key integer. Scale: per-source top-k rides GroupedTopK (bounded
     // map-side heaps, one shuffle on source) — no global or per-source
     // sort ever materializes.
     "t_weighted_sample" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       val pri = table(s, dir, "documents")
-        .withColumn("u", expr("char_rolling_hash(text) % 1000003 + 1"))
+        .withColumn("u", charRollingHash(col("text")) % 1000003 + 1)
         .withColumn("key_e6", expr("(u * 1000000) div n_chars"))
         .select(col("source"), col("doc_id"), col("n_chars"), col("u"), col("key_e6"))
       val w = Window.partitionBy(col("source")).orderBy(col("key_e6"), col("doc_id"))
@@ -206,11 +205,10 @@ object CurationQueries {
     // the same scheme recurses on a finer sub-bucket — the histogram
     // trick composes.) Output is one summary row.
     "t_token_budget_select" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark -> count_in_set
       val budget = 20000L
       val d = table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
-        .withColumn("q", expr(TextQueries.qualitySpark))
+        .withColumn("q", TextQueries.qualitySpark)
         .select(
           col("doc_id"),
           size(col("ws")).cast("long").as("toks"),
@@ -268,10 +266,9 @@ object CurationQueries {
     // ((cum_excl·10) div total) — deterministic, no per-doc window, no
     // percent_rank sort over the corpus. Output is O(sources × 10).
     "t_quality_calibration" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark -> count_in_set
       val d = table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
-        .withColumn("q", expr(TextQueries.qualitySpark))
+        .withColumn("q", TextQueries.qualitySpark)
         .select(col("source"), expr("CAST(floor(q * 1000) AS BIGINT)").as("qb"))
       // two consumers (cumulative pass + per-source totals) over a tiny
       // frame with a full-corpus lineage — materialize once (same
@@ -316,14 +313,14 @@ object CurationQueries {
     // exchange is the O(sources) final groupBy. At 100 TB this is a pure
     // map-side scan — the ideal shape for classifier-filter passes.
     "t_quality_lr_score" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn(
           "sum_w",
-          expr(
-            "aggregate(transform(ws, w -> ((char_rolling_hash(w) % 4096) * 2654435761) % 1000000007 % 2001), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-          )
+          aggregate(
+            transform(col("ws"), w => ((charRollingHash(w) % 4096) * 2654435761L) % 1000000007 % 2001),
+            lit(0L),
+            (acc, x) => acc + x)
         )
         .withColumn("score_e6", expr("(sum_w * 1000000) div (CAST(size(ws) AS BIGINT) * 2000)"))
         .groupBy(col("source"))
@@ -371,7 +368,6 @@ object CurationQueries {
     // t_bpe_train_merges no-collect loop). At 100 TB: 6 linear scans of
     // a 6-column integer frame, six 1-row exchanges, zero driver loops.
     "t_quality_lr_fit" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // quality/stopCount -> count_in_set
       import org.apache.spark.sql.DataFrame
       val feats = table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
@@ -380,8 +376,9 @@ object CurationQueries {
           lit(1L).as("x0"),
           least(size(col("ws")), lit(100)).cast("long").as("x1"),
           expr("CAST(size(array_distinct(ws)) * 100 div size(ws) AS BIGINT)").as("x2"),
-          expr(s"CAST(${TextQueries.stopCountSpark} * 100 div size(ws) AS BIGINT)").as("x3"),
-          when(expr(TextQueries.qualitySpark) >= 0.5, lit(1000000L))
+          call_function("div", countInSet(col("ws"), TextQueries.Stop) * 100, size(col("ws")))
+            .cast("long").as("x3"),
+          when(TextQueries.qualitySpark >= 0.5, lit(1000000L))
             .otherwise(lit(0L)).as("y"))
         .localCheckpoint()
       val pCol = greatest(lit(0L), least(lit(1000000L),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.SketchExpressions.vecDot
+
 /** Similarity search + embedding near-dup over the `embeddings` table
   * (`Array[Float]`, 64-dim, unit-norm).
   *
@@ -26,16 +28,13 @@ import org.apache.spark.sql.functions._
 object EmbeddingQueries {
   import Q._
 
-  /** Spark: sequential-fold dot product of two DOUBLE-array columns —
-    * the native codegen `vec_dot` expression (SketchExpressions.VecDot),
-    * bit-identical to the builtin `aggregate(zip_with(...))` fold it
-    * replaced (same left-fold order, proven in SketchExpressionsSpec) but
-    * one fused loop instead of ~2·dim interpreted lambda calls per pair.
+  /** DuckDB mirror of the Spark side's dot product, the native codegen
+    * `vecDot` (SketchExpressions.VecDot): bit-identical to the builtin
+    * `aggregate(zip_with(...))` fold it replaced (same left-fold order,
+    * proven in SketchExpressionsSpec) but one fused loop instead of
+    * ~2·dim interpreted lambda calls per pair. Same element order ⇒ same
+    * double.
     */
-  private def dotSpark(a: String, b: String): String =
-    s"vec_dot($a, $b)"
-
-  /** DuckDB mirror of [[dotSpark]] (same element order ⇒ same double). */
   private def dotDuck(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), [($a)[i] * ($b)[i] for i in range(1, len($a) + 1)]), (x, y) -> x + y)"
 
@@ -151,7 +150,7 @@ object EmbeddingQueries {
         col("vec_id"),
         col("t"),
         when(
-          expr(dotSpark("v", "coeffs")) >= 0,
+          vecDot(col("v"), col("coeffs")) >= 0,
           expr("shiftleft(CAST(1 AS BIGINT), j)")
         ).otherwise(lit(0L)).as("bit")
       )
@@ -190,13 +189,12 @@ object EmbeddingQueries {
 
   /** vectors as DOUBLE arrays + squared norm. */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     table(s, dir, "embeddings")
       .select(
         col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")
       )
-      .withColumn("nrm", expr(dotSpark("v", "v")))
+      .withColumn("nrm", vecDot(col("v"), col("v")))
   }
 
   private val vecsCte =
@@ -207,7 +205,6 @@ object EmbeddingQueries {
     * every 20th vector (planted pairs at cosine ≥ 0.97; natural max ~0.51).
     */
   private[graft] def nearCorpus(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     val base = table(s, dir, "embeddings")
       .select(
         col("vec_id"),
@@ -219,7 +216,7 @@ object EmbeddingQueries {
         (col("vec_id") + 1000000L).as("vec_id"),
         expr("concat(array(element_at(v, 1) + 0.25), slice(v, 2, 63))").as("v")
       )
-    base.unionAll(pert).withColumn("nrm", expr(dotSpark("v", "v")))
+    base.unionAll(pert).withColumn("nrm", vecDot(col("v"), col("v")))
   }
 
   private val nearCorpusCte =
@@ -233,7 +230,7 @@ object EmbeddingQueries {
 
   /** cosine between pre-normed frames aliased q/c (raw, unrounded). */
   private val cosCol =
-    expr(s"${dotSpark("qv", "cv")} / (sqrt(qn) * sqrt(cn))")
+    vecDot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn")))
 
   /** Exact cardinality of [[nearCorpus]] (base ∪ planted copies), cached
     * per dir like [[Q.cachedRowCount]]: the base count comes from that
@@ -342,7 +339,7 @@ object EmbeddingQueries {
     // build); the 5 greedy rounds then run on an O(queries × 20) frame
     // whose size is independent of corpus scale — iterative refinement
     // never re-touches the corpus. Scoring is the same fold-ordered
-    // vec_dot doubles as every other embedding query, so each round's
+    // vecDot doubles as every other embedding query, so each round's
     // argmax is bit-identical in the DuckDB mirror (selection is
     // discrete — one ulp of divergence would pick a different document,
     // making this the sharpest float-portability test in the suite).
@@ -363,7 +360,7 @@ object EmbeddingQueries {
           col("a.query_id").as("query_id"),
           col("a.neighbor_id").as("ida"),
           col("b.neighbor_id").as("idb"),
-          (expr(dotSpark("a.cv", "b.cv")) / (sqrt(col("a.cn")) * sqrt(col("b.cn"))))
+          (vecDot(col("a.cv"), col("b.cv")) / (sqrt(col("a.cn")) * sqrt(col("b.cn"))))
             .as("sim")
         )
         .localCheckpoint() // 20×20 per query, consumed every round
@@ -594,10 +591,6 @@ object EmbeddingQueries {
     // sum/count per (cid, dim) — no ordered folds, no collect — and the
     // assignment is a broadcast-centroid argmax identical to e_ivf_topk's.
     "e_kmeans_ivf_topk" -> ((s, dir) => {
-      // register vec_dot BEFORE the first eager-analyzed expr below —
-      // standalone invocation must not depend on an earlier query having
-      // registered it in the shared session (latent-bug fix, round 5)
-      graft.functions.SketchExpressions.register(s)
       // quantized corpus: qvi exact BIGINT, qv = same values as DOUBLE
       // (64 dims × (2^20)^2 ≤ 2^46 keeps dot products overflow-safe)
       val vec = table(s, dir, "embeddings")
@@ -607,7 +600,7 @@ object EmbeddingQueries {
             .as("qvi")
         )
         .withColumn("qv", expr("transform(qvi, x -> CAST(x AS DOUBLE))"))
-        .withColumn("qn", expr(dotSpark("qv", "qv")))
+        .withColumn("qn", vecDot(col("qv"), col("qv")))
       // one Lloyd step: nearest-centroid assignment (single-pass argmax,
       // ties → smallest cid), then per-dimension exact integer mean
       def assign(pts: DataFrame, cent: DataFrame): DataFrame =
@@ -626,7 +619,7 @@ object EmbeddingQueries {
           .agg((sum(col("col")).cast("double") / count(lit(1))).as("v"))
           .groupBy(col("cid"))
           .agg(expr("transform(array_sort(collect_list(struct(pos, v))), p -> p.v)").as("cv"))
-          .withColumn("cn", expr(dotSpark("cv", "cv")))
+          .withColumn("cn", vecDot(col("cv"), col("cv")))
       // IVF-standard centroid count k ≈ √n: the seed modulus grows with
       // the corpus (floored at 50 so small scales keep their previous
       // exact results), so Lloyd assignment work is n·k ≈ n^1.5 instead
@@ -805,7 +798,7 @@ object EmbeddingQueries {
     // the output is the raw ADC ranking so the oracle checks the PQ math
     // itself, not a re-rank that would mask it). All scoring is IEEE
     // double arithmetic folded in a FIXED order (codebook scores: one
-    // fused vec_dot; ADC sum: m-sorted list fold) so DuckDB reproduces
+    // fused vecDot; ADC sum: m-sorted list fold) so DuckDB reproduces
     // every score bit-identically — an unordered SUM over the M partial
     // scores would be partitioning-dependent in the last ulp.
     "e_pq_topk" -> ((s, dir) =>
@@ -884,7 +877,7 @@ object EmbeddingQueries {
         .select(floor(col("vec_id") / cbMod).cast("long").as("j"), col("v"))
         .select(col("j"), explode(expr(s"sequence(0, ${M - 1})")).as("m"), col("v"))
         .select(col("j"), col("m"), expr("slice(v, m * 8 + 1, 8)").as("cv"))
-        .withColumn("cc", expr(dotSpark("cv", "cv")))
+        .withColumn("cc", vecDot(col("cv"), col("cv")))
       // encode: per (vector, subspace) argmin-L2 codeword; for fixed x,
       // argmin ||x-c||² == argmax (2·x·c − c·c) — skips the x·x term
       val sub = all
@@ -892,7 +885,7 @@ object EmbeddingQueries {
         .select(col("vec_id"), col("m"), expr("slice(v, m * 8 + 1, 8)").as("xm"))
       val codes = sub
         .join(broadcast(cb), "m")
-        .withColumn("sc", expr(s"2 * ${dotSpark("xm", "cv")} - cc"))
+        .withColumn("sc", lit(2) * vecDot(col("xm"), col("cv")) - col("cc"))
         .groupBy(col("vec_id"), col("m"))
         .agg(max(struct(col("sc"), (-col("j")).as("negj"))).as("a"))
         .select(col("vec_id"), col("m"), (-col("a.negj")).as("code"))
@@ -903,7 +896,7 @@ object EmbeddingQueries {
         .select(col("query_id"), col("m"), expr("slice(v, m * 8 + 1, 8)").as("qm"))
         .join(broadcast(cb), "m")
         .select(col("query_id"), col("m"), col("j").as("code"),
-          expr(dotSpark("qm", "cv")).as("lut"))
+          vecDot(col("qm"), col("cv")).as("lut"))
       // score every encoded vector against every query via the tables;
       // the M partial scores fold in subspace order (deterministic sum)
       val w = Window.partitionBy(col("query_id")).orderBy(col("qscore").desc, col("neighbor_id"))
@@ -1104,7 +1097,7 @@ object EmbeddingQueries {
           (col("vec_id") + 2000000L).as("vec_id"),
           expr("concat(array(element_at(v, 1) + 0.25), slice(v, 2, 63))").as("v")
         )
-        .withColumn("nrm", expr(dotSpark("v", "v")))
+        .withColumn("nrm", vecDot(col("v"), col("v")))
       all
         .filter(col("vec_id") % 250 =!= 0)
         .unionAll(plants)
@@ -1178,7 +1171,7 @@ object EmbeddingQueries {
     "e_matryoshka_topk" -> ((s, dir) => {
       val all = vecs(s, dir)
         .withColumn("pv", expr("slice(v, 1, 16)"))
-        .withColumn("pn", expr(dotSpark("pv", "pv")))
+        .withColumn("pn", vecDot(col("pv"), col("pv")))
       val q = all
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -1190,7 +1183,7 @@ object EmbeddingQueries {
       val short = cPrefix
         .join(broadcast(q.select("query_id", "qpv", "qpn")),
           col("neighbor_id") =!= col("query_id"))
-        .withColumn("pcos", expr(s"${dotSpark("qpv", "cpv")} / (sqrt(qpn) * sqrt(cpn))"))
+        .withColumn("pcos", vecDot(col("qpv"), col("cpv")) / (sqrt(col("qpn")) * sqrt(col("cpn"))))
         .withColumn("prefix_rank", row_number().over(wPre))
         .filter(col("prefix_rank") <= 50)
         .select("query_id", "neighbor_id", "prefix_rank")
@@ -1503,7 +1496,7 @@ object EmbeddingQueries {
         .select(floor(col("vec_id") / cbMod).cast("long").as("j"), col("v"))
         .select(col("j"), explode(expr("sequence(0, 7)")).as("m"), col("v"))
         .select(col("j"), col("m"), expr("slice(v, m * 8 + 1, 8)").as("cv"))
-        .withColumn("cc", expr(dotSpark("cv", "cv")))
+        .withColumn("cc", vecDot(col("cv"), col("cv")))
         .coalesce(1).write.mode("overwrite").saveAsTable(codeT)
     }
     (centT, postT, codeT)
@@ -1541,7 +1534,7 @@ object EmbeddingQueries {
             sum(col("cid")).as("centroid_checksum"))
         ))
         .crossJoin(broadcast(
-          // codeword norms are the same fixed-order vec_dot doubles the
+          // codeword norms are the same fixed-order vecDot doubles the
           // mirror computes, so the e6-quantized sum is engine-exact
           s.table(codeT).agg(
             count(lit(1)).as("n_codewords"),
@@ -1759,7 +1752,7 @@ object EmbeddingQueries {
         col("m.bv").as("bv"), col("m.bn").as("bn"))
     val withB = withOld
       .join(broadcast(seedB), Seq("cid"))
-      .withColumn("cos_b", expr(s"${dotSpark("qv", "bv")} / (sqrt(qn) * sqrt(bn))"))
+      .withColumn("cos_b", vecDot(col("qv"), col("bv")) / (sqrt(col("qn")) * sqrt(col("bn"))))
     ReseedParts(top, seedB, withB)
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.SketchExpressions.{bloomAgg, mightContain}
 import graft.operators.{AsOfJoin, RangeJoin, Salting}
 
 /** Driver-visible registrations of the scale-tier join operators
@@ -313,10 +314,10 @@ object OperatorQueries {
         .orderBy("user_id")
     }),
 
-    // Explicit bloom-filter semi-join prune (functions/BloomFunctions):
-    // one month of orders (~1.2% selectivity) builds a bloom over its
-    // orderkeys; the lineitem FACT side drops non-matching rows at the
-    // scan — BEFORE its shuffle — via graft_might_contain over the
+    // Explicit bloom-filter semi-join prune (SketchExpressions.bloomAgg /
+    // mightContain): one month of orders (~1.2% selectivity) builds a
+    // bloom over its orderkeys; the lineitem FACT side drops non-matching
+    // rows at the scan — BEFORE its shuffle — via mightContain over the
     // 1-row broadcast bloom. At 100 TB this shrinks the fact exchange to
     // ~the matching fraction; false positives are removed by the real
     // join that follows (no false negatives), so results are EXACTLY the
@@ -324,41 +325,27 @@ object OperatorQueries {
     // superset/soundness property and that the prune actually dropped
     // rows ahead of the join.
     "o_bloom_pruned_join" -> ((s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val sel = table(s, dir, "orders")
         .filter(col("o_orderdate").between("1996-03-01", "1996-03-31"))
         .select(col("o_orderkey"), col("o_orderpriority"))
       // might_contain requires its filter operand to be a CONSTANT or a
       // scalar subquery (the same contract Spark's own InjectRuntimeFilter
       // satisfies — the filter is built once, then shipped to every fact
-      // task), so the build side rides a scalar subquery over a temp view
-      // rather than a 1-row cross join. View names are unique per run
-      // (ADVICE/VERDICT r5: fixed global names would collide under
-      // concurrent same-session executions). Sized at 4,000,000 expected
+      // task), so the build side rides a scalar subquery rather than a
+      // 1-row cross join. Sized at 4,000,000 expected
       // keys — exactly spark.sql.optimizer.runtime.bloomFilter.maxNumItems,
       // which BloomFilterAggregate silently caps at, so the documented
       // sizing IS the constructed filter (VERDICT r5: the previous 2^22
       // ask was capped to this anyway); at bench SFs the actual key count
       // is far smaller, driving the FP rate to ~0; a production build
       // would size from table stats.
-      val runTag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val selView = s"graft_bloom_sel_$runTag"
-      val factView = s"graft_bloom_fact_$runTag"
-      sel.createOrReplaceTempView(selView)
-      table(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-        .createOrReplaceTempView(factView)
+      val bloom = sel.agg(bloomAgg(xxhash64(col("o_orderkey")), 4000000L)).scalar()
       val revUnits =
         round(col("l_extendedprice") * 100).cast("long") *
           round((lit(1) - col("l_discount")) * 100).cast("long")
-      s.sql(
-        s"""SELECT l_orderkey, l_extendedprice, l_discount
-           |FROM $factView
-           |WHERE graft_might_contain(
-           |  (SELECT graft_bloom_agg(xxhash64(o_orderkey), CAST(4000000 AS BIGINT))
-           |   FROM $selView),
-           |  xxhash64(l_orderkey))""".stripMargin
-      )
+      table(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
+        .filter(mightContain(bloom, xxhash64(col("l_orderkey"))))
         .join(sel, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(

@@ -64,9 +64,10 @@ object Q {
     * (micros), whatever parquet encoding the corpus shipped with. The
     * driver's testdata has used THREE encodings across regenerations:
     *
-    *   1. TIMESTAMP(NANOS) — Spark 4 refuses it by default; the session
-    *      mains/test base set `spark.sql.legacy.parquet.nanosAsLong=true`
-    *      at startup (set once there, not here — a query constructor
+    *   1. TIMESTAMP(NANOS) — Spark 4 refuses it by default; every
+    *      session built by `graft.GraftSession` (mains and test base)
+    *      sets `spark.sql.legacy.parquet.nanosAsLong=true` at startup
+    *      (set once there, not here — a query constructor
     *      mutating shared session state is order-dependent for later
     *      parquet reads, VERDICT r3 #6), surfacing it as LONG nanos →
     *      truncate to micros with integer division (`div` — double
@@ -74,7 +75,7 @@ object Q {
     *      cast truncates identically.
     *   2. timestamp[us] WITHOUT timezone → Spark reads TIMESTAMP_NTZ,
     *      which `unix_micros`/`window` typing rejects or treats
-    *      differently → cast to TIMESTAMP. Every graft session pins
+    *      differently → cast to TIMESTAMP. `graft.GraftSession` pins
     *      `spark.sql.session.timeZone=UTC`, so the NTZ→LTZ cast is a
     *      pure re-tag of the same micros value (no wall-clock shift);
     *      that UTC pin is LOAD-BEARING for oracle hash parity — DuckDB

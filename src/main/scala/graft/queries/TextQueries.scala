@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFeatures.{charHashDuck, charHashSpark, hashedNgramsDuck, hashedNgramsSpark, minhashA, minhashB, P}
+import graft.functions.SketchExpressions.{bloomAgg, charRollingHash, countInSet, mightContain, wordNgramHashes}
+import graft.functions.TextFeatures.{charHashDuck, charHashSpark, hashedNgramsDuck, minhashA, minhashB, P}
 
 /** Text-analysis suite over `documents` — per-document feature extraction
   * for a training-data pipeline: token counting, quality scoring,
@@ -19,8 +21,7 @@ object TextQueries {
   import Q._
 
   /** Stopword list for quality/language scoring (ASCII, lowercase). */
-  private val Stop = Seq("the", "a", "of", "and", "to", "in", "is", "on")
-  private def stopArr = s"array(${Stop.map("'" + _ + "'").mkString(", ")})"
+  private[queries] val Stop = Seq("the", "a", "of", "and", "to", "in", "is", "on")
   private def stopList = s"[${Stop.map("'" + _ + "'").mkString(", ")}]"
 
   /** BPE-ish token pattern: word pieces, digits, or single punctuation. */
@@ -29,23 +30,22 @@ object TextQueries {
   /** Quality score over a word-array column `ws` (shared by
     * `t_quality_scores` and the curation funnel): length signal +
     * type-token diversity + stopword-presence bonus, all integer-count
-    * ratios → bit-portable across engines.
+    * ratios → bit-portable across engines. The stopword count is the
+    * native codegen countInSet (CountInSetSpec proves it equal to the
+    * size(filter(...array_contains...)) lambda form the mirror uses).
     */
-  private[queries] val qualitySpark =
-    s"""round(CASE WHEN size(ws) >= 20 THEN 0.4D ELSE size(ws) * 0.02D END
-       | + size(array_distinct(ws)) * 0.3D / size(ws)
-       | + CASE WHEN count_in_set(ws, $stopArr) * 10 >= size(ws) THEN 0.3D ELSE 0.0D END, 6)""".stripMargin
+  private[queries] def qualitySpark: Column = {
+    val ws = col("ws")
+    round(
+      when(size(ws) >= 20, 0.4).otherwise(size(ws) * 0.02)
+        + size(array_distinct(ws)) * 0.3 / size(ws)
+        + when(countInSet(ws, Stop) * 10 >= size(ws), 0.3).otherwise(0.0),
+      6)
+  }
 
-  /** Stopword count over a word-array column `ws` (feature input for the
-    * quality classifier pair in [[CurationQueries]]). r14: the
-    * size(filter(...array_contains...)) lambda became the native codegen
-    * count_in_set (CountInSetSpec proves equality; callers must register
-    * SketchExpressions).
+  /** DuckDB mirror of the stopword count (feature input for the quality
+    * classifier pair in [[CurationQueries]]).
     */
-  private[queries] def stopCountSpark =
-    s"count_in_set(ws, $stopArr)"
-
-  /** DuckDB mirror of [[stopCountSpark]]. */
   private[queries] def stopCountDuck =
     s"len(list_filter(ws, t -> list_contains($stopList, t)))"
 
@@ -67,7 +67,6 @@ object TextQueries {
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.functions.SketchExpressions.register(s)
     val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val test0 = docs.filter(col("doc_id") % 50 === 0)
     val plant = docs
@@ -98,10 +97,10 @@ object TextQueries {
     * hash folded from the word hashes — no per-n-gram string allocation.
     * r14: the let-bound transform/aggregate lambda chain (CodegenFallback
     * — see hashedSetsOf's scaladoc) is fused into the native codegen
-    * word_ngram_hashes expression, bit-equal by NgramHashSpec.
+    * wordNgramHashes expression, bit-equal by NgramHashSpec.
     */
   private def ngramHashes(df: org.apache.spark.sql.DataFrame, idCol: String) =
-    df.withColumn("g", expr("array_distinct(word_ngram_hashes(split(text, ' '), 8))"))
+    df.withColumn("g", array_distinct(wordNgramHashes(split(col("text"), " "), 8)))
       .select(col("doc_id").as(idCol), explode(col("g")).as("h"))
 
   val queries: Map[String, Fn] = Map(
@@ -119,37 +118,34 @@ object TextQueries {
 
     // Quality scoring: length/stopword/diversity signals → one score.
     // All ratios are integer-count divisions rounded to 6 — portable.
-    "t_quality_scores" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
+    "t_quality_scores" -> ((s, dir) =>
       table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .select(
           col("doc_id"),
-          expr(s"round(CAST(count_in_set(ws, $stopArr) AS DOUBLE) / size(ws), 6)")
+          round(countInSet(col("ws"), Stop).cast("double") / size(col("ws")), 6)
             .as("stopword_ratio"),
           expr("round(CAST(size(array_distinct(ws)) AS DOUBLE) / size(ws), 6)")
             .as("distinct_ratio"),
           expr("round(CAST(length(text) - size(ws) + 1 AS DOUBLE) / size(ws), 6)")
             .as("mean_word_len"),
-          expr(qualitySpark).as("quality")
+          qualitySpark.as("quality")
         )
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // Language ID: n-gram/stopword-overlap heuristic scored per language,
     // argmax with deterministic tie-break (first in list order). With the
     // driver's shared-vocabulary synthetic corpus every doc scores 'en';
     // the operator is the point, not the answer. r14: the four per-
-    // language size(filter(...)) lambda stacks became native count_in_set
+    // language size(filter(...)) lambda stacks became native countInSet
     // loops (CountInSetSpec; the oracle mirrors the lambda form).
-    "t_lang_id" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
+    "t_lang_id" -> ((s, dir) =>
       table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
-        .withColumn("s_en", expr(s"count_in_set(ws, $stopArr)"))
-        .withColumn("s_es", expr("count_in_set(ws, array('el', 'la', 'de', 'que', 'y'))"))
-        .withColumn("s_de", expr("count_in_set(ws, array('der', 'die', 'das', 'und', 'ist'))"))
-        .withColumn("s_fr", expr("count_in_set(ws, array('le', 'la', 'et', 'les', 'des'))"))
+        .withColumn("s_en", countInSet(col("ws"), Stop))
+        .withColumn("s_es", countInSet(col("ws"), Seq("el", "la", "de", "que", "y")))
+        .withColumn("s_de", countInSet(col("ws"), Seq("der", "die", "das", "und", "ist")))
+        .withColumn("s_fr", countInSet(col("ws"), Seq("le", "la", "et", "les", "des")))
         .select(
           col("doc_id"),
           col("lang").as("labeled_lang"),
@@ -160,18 +156,15 @@ object TextQueries {
               |     ELSE 'fr' END""".stripMargin
           ).as("predicted_lang")
         )
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // Document fingerprinting: rolling polynomial hash of the whole text
     // via the native codegen expression (CharRollingHashSpec proves it
     // bit-equal to the higher-order-builtin formulation the oracle mirrors).
-    "t_fingerprints" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
+    "t_fingerprints" -> ((s, dir) =>
       table(s, dir, "documents")
-        .select(col("doc_id"), expr("char_rolling_hash(text)").as("fingerprint"))
-        .orderBy("doc_id")
-    }),
+        .select(col("doc_id"), charRollingHash(col("text")).as("fingerprint"))
+        .orderBy("doc_id")),
 
     // TF-IDF top terms per document. The score is transcendental-free on
     // purpose: idf_e6 = (N * 10^6) div df and score = tf * idf_e6 are
@@ -208,7 +201,7 @@ object TextQueries {
     // doc_id % 9 == 0 get the first 12 words of test doc (doc_id%10)*50
     // appended — via an inner join, so a mapping target absent at small
     // scale factors simply plants nothing, identically in both engines.
-    // Scale design: n-grams are hashed to BIGINT (char_rolling_hash,
+    // Scale design: n-grams are hashed to BIGINT (charRollingHash,
     // native codegen) so the join key is 8 bytes; the TEST side is the
     // broadcast side — a held-out benchmark set is small by construction,
     // so the 100 TB train scan joins with no shuffle at all. Counting
@@ -236,7 +229,6 @@ object TextQueries {
     // contaminated-fraction selectivity the shuffle carries only the
     // pruned sliver.
     "t_bloom_decontaminate" -> ((s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val (train, test0) = contaminatedTrainTest(s, dir)
       // testNg has two consumers (bloom build + verify join) but the
       // held-out set is small by construction — re-hashing it is cheaper
@@ -244,17 +236,9 @@ object TextQueries {
       // ~0.5 s at sf0.1 for nothing; the expensive TRAIN side is hashed
       // once either way)
       val testNg = ngramHashes(test0, "test_doc_id")
-      val runTag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val trainView = s"graft_decon_train_$runTag"
-      val testView = s"graft_decon_test_$runTag"
-      ngramHashes(train, "train_doc_id").createOrReplaceTempView(trainView)
-      testNg.createOrReplaceTempView(testView)
-      s.sql(
-        s"""SELECT train_doc_id, h FROM $trainView
-           |WHERE graft_might_contain(
-           |  (SELECT graft_bloom_agg(xxhash64(h), CAST(4000000 AS BIGINT)) FROM $testView),
-           |  xxhash64(h))""".stripMargin
-      )
+      val bloom = testNg.agg(bloomAgg(xxhash64(col("h")), 4000000L)).scalar()
+      ngramHashes(train, "train_doc_id")
+        .filter(mightContain(bloom, xxhash64(col("h"))))
         .join(testNg, "h")
         .groupBy(col("train_doc_id"), col("test_doc_id"))
         .agg(count(lit(1)).as("n_shared_ngrams"))
@@ -272,7 +256,6 @@ object TextQueries {
     // count_distinct for approx_count_distinct if the surviving-text
     // cardinality exceeds driver memory for the exact path.
     "t_curation_funnel" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark → count_in_set
       val docs = table(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       val cor = docs.unionAll(
         docs
@@ -284,7 +267,7 @@ object TextQueries {
       val pass3 = pass2 && size(col("ws")) >= 30
       cor
         .withColumn("ws", split(col("text"), " "))
-        .withColumn("q", expr(qualitySpark))
+        .withColumn("q", qualitySpark)
         .agg(
           count(lit(1)).as("rows_in"),
           sum(when(pass1, 1L).otherwise(0L)).as("after_lang"),
@@ -348,7 +331,6 @@ object TextQueries {
     // text itself is returned as its rolling-hash fingerprint so the
     // result stays narrow.
     "t_pii_redact" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       // `[.]` not `\.`: Spark SQL string literals eat backslash escapes
       // (so '\.' would reach the regex engine as bare '.'), DuckDB's
       // don't — the bracket class is identical in both.
@@ -370,8 +352,8 @@ object TextQueries {
           // left-to-right match count, same engine, same pattern.
           expr(s"CAST(regexp_count(t, '$emailPat') AS BIGINT)").as("n_emails"),
           expr(s"CAST(regexp_count(t, '$phonePat') AS BIGINT)").as("n_phones"),
-          expr(
-            s"char_rolling_hash(regexp_replace(regexp_replace(t, '$emailPat', '[EMAIL]'), '$phonePat', '[PHONE]'))"
+          charRollingHash(
+            expr(s"regexp_replace(regexp_replace(t, '$emailPat', '[EMAIL]'), '$phonePat', '[PHONE]')")
           ).as("redacted_fp")
         )
         .orderBy("doc_id")
@@ -399,8 +381,7 @@ object TextQueries {
     // near-dup copies of a doc hash identically, so a dedup pass must
     // still run first — split assignment is per-byte-content only).
     // Embarrassingly parallel: one codegen projection, one tiny agg.
-    "t_hash_split" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
+    "t_hash_split" -> ((s, dir) =>
       table(s, dir, "documents")
         .select(
           col("doc_id"),
@@ -408,7 +389,7 @@ object TextQueries {
           // native codegen char hash (bit-identical to the builtin fold,
           // CharRollingHashSpec) — the lambda form costs one interpreted
           // closure call per character
-          (expr("char_rolling_hash(text)") % 100).as("h")
+          (charRollingHash(col("text")) % 100).as("h")
         )
         .select(
           col("doc_id"),
@@ -425,8 +406,7 @@ object TextQueries {
           min(col("doc_id")).as("min_doc"),
           max(col("doc_id")).as("max_doc")
         )
-        .orderBy("split")
-    }),
+        .orderBy("split")),
 
     // Language rebalancing via stratified hash sampling: en is
     // over-represented (~44% of the corpus), so sample it at 10% and the
@@ -435,10 +415,9 @@ object TextQueries {
     // engine/partitioning-independent; no rand()), so the sample is
     // reproducible and the oracle sees the identical subset. One scan,
     // no shuffle until the tiny per-lang aggregate.
-    "t_stratified_sample" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
+    "t_stratified_sample" -> ((s, dir) =>
       table(s, dir, "documents")
-        .withColumn("hh", expr("char_rolling_hash(text)") % 1000)
+        .withColumn("hh", charRollingHash(col("text")) % 1000)
         .filter(
           col("hh") < when(col("lang") === "en", 100).otherwise(500)
         )
@@ -448,8 +427,7 @@ object TextQueries {
           sum(col("n_chars")).as("sampled_chars"),
           min(col("doc_id")).as("min_doc")
         )
-        .orderBy("lang")
-    }),
+        .orderBy("lang")),
 
     // Document chunking: fixed 64-token windows at stride 48 (16-token
     // overlap) — the pretraining/RAG chunk plan. Pure per-row expansion
@@ -459,8 +437,7 @@ object TextQueries {
     // CONTENT materialized as its rolling-hash fingerprint — the real
     // chunk text rides the same slice, fingerprinted here so the output
     // stays narrow and the oracle exact.
-    "t_chunk_plan" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
+    "t_chunk_plan" -> ((s, dir) =>
       table(s, dir, "documents")
         .select(
           col("doc_id"),
@@ -478,11 +455,10 @@ object TextQueries {
           (col("chunk_start") / 48).cast("long").as("chunk_idx"),
           col("chunk_start"),
           least(col("chunk_start") + 64, col("n_tokens")).as("chunk_end"),
-          expr("char_rolling_hash(array_join(slice(ws, CAST(chunk_start + 1 AS INT), 64), ' '))")
+          charRollingHash(expr("array_join(slice(ws, CAST(chunk_start + 1 AS INT), 64), ' ')"))
             .as("chunk_fp")
         )
-        .orderBy("doc_id", "chunk_idx")
-    }),
+        .orderBy("doc_id", "chunk_idx")),
 
     // Sequence packing — lay documents out into fixed-capacity training
     // bins (C = 512 whitespace tokens) in deterministic (source, doc_id)
@@ -809,10 +785,9 @@ object TextQueries {
     // identical filter+rank, so determinism never depends on the margin
     // being sufficient.
     "t_mixture_sampling" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       val docs = table(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),
-          expr("char_rolling_hash(text)").as("h"))
+          charRollingHash(col("text")).as("h"))
       val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
         .withColumn("s_s", floor(sqrt(col("n_s").cast("double")) * 1e6).cast("long"))
       val tot = counts.agg(sum("n_s").as("n_total"), sum("s_s").as("z"))
@@ -896,10 +871,9 @@ object TextQueries {
     // later query. The exchange floor is cheaper than the pin at every
     // scale that matters.
     "t_source_novelty" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       // r14: fused codegen n-gram hashing (see hashedSetsOf / NgramHashSpec)
       val spans = table(s, dir, "documents")
-        .withColumn("g", expr("array_distinct(word_ngram_hashes(split(text, ' '), 8))"))
+        .withColumn("g", array_distinct(wordNgramHashes(split(col("text"), " "), 8)))
         .select(col("source"), explode(col("g")).as("h"))
       spans
         .groupBy(col("h"), col("source")).agg(count(lit(1)).as("cnt"))
@@ -942,9 +916,8 @@ object TextQueries {
     // recompute-twice replacement (298 s — the (doc, b) shuffle itself
     // was the cost, not the checkpoint).
     "t_dsir_importance" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       // r14: unigram ∪ bigram features via the fused codegen
-      // word_ngram_hashes expression — n=1 IS the word-hash array for
+      // wordNgramHashes expression — n=1 IS the word-hash array for
       // the never-empty split output (split always yields ≥ 1 element,
       // so the short-doc fallback branch never fires for n=1), and n=2
       // replaces the let-bound bigram fold lambda (whose array(...) +
@@ -956,8 +929,9 @@ object TextQueries {
       def withFeatures(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = df
         .withColumn(
           "fs",
-          expr("concat(word_ngram_hashes(split(text, ' '), 1), " +
-            "word_ngram_hashes(split(text, ' '), 2))")
+          concat(
+            wordNgramHashes(split(col("text"), " "), 1),
+            wordNgramHashes(split(col("text"), " "), 2))
         )
       val model = withFeatures(table(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id"), explode(col("fs")).as("h"))

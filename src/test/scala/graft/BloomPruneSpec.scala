@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.BloomFunctions
+import graft.functions.SketchExpressions.{bloomAgg, mightContain}
 
 /** Soundness + effectiveness of the explicit bloom-filter semi-join prune
-  * (`functions/BloomFunctions`, registered query `o_bloom_pruned_join`).
+  * (`SketchExpressions.bloomAgg`/`mightContain`, registered query
+  * `o_bloom_pruned_join`).
   *
-  * Soundness: `graft_might_contain` has NO false negatives — every fact
+  * Soundness: `mightContain` has NO false negatives — every fact
   * row that truly joins must survive the prune (the survivor set is a
   * superset of the semi-join). Effectiveness: with a selective build side
   * the prune must actually drop rows BEFORE the join (otherwise it's dead
@@ -18,7 +19,6 @@ import graft.functions.BloomFunctions
 class BloomPruneSpec extends SparkSpecBase {
 
   test("bloom prune keeps every true match and drops non-matching fact rows") {
-    BloomFunctions.register(spark)
     val orders = spark.read.parquet(s"$Sf0001/orders.parquet")
     val lineitem = spark.read.parquet(s"$Sf0001/lineitem.parquet")
 
@@ -28,16 +28,11 @@ class BloomPruneSpec extends SparkSpecBase {
     val nSel = sel.count()
     assert(nSel > 0, "selective month must match some orders")
 
-    sel.createOrReplaceTempView("bloomspec_sel")
-    lineitem.select(col("l_orderkey")).createOrReplaceTempView("bloomspec_fact")
     // might_contain demands a constant/scalar-subquery filter operand
-    val pruned = spark.sql(
-      """SELECT l_orderkey FROM bloomspec_fact
-        |WHERE graft_might_contain(
-        |  (SELECT graft_bloom_agg(xxhash64(o_orderkey), CAST(1048576 AS BIGINT))
-        |   FROM bloomspec_sel),
-        |  xxhash64(l_orderkey))""".stripMargin
-    )
+    val bloom = sel.agg(bloomAgg(xxhash64(col("o_orderkey")), 1048576L)).scalar()
+    val pruned = lineitem
+      .select(col("l_orderkey"))
+      .filter(mightContain(bloom, xxhash64(col("l_orderkey"))))
 
     val trueMatches = lineitem
       .join(sel, col("l_orderkey") === col("o_orderkey"), "left_semi")
@@ -62,7 +57,6 @@ class BloomPruneSpec extends SparkSpecBase {
   }
 
   test("bloom aggregate merges across partitionings deterministically") {
-    BloomFunctions.register(spark)
     import spark.implicits._
     val a = (1L to 1000L).toDF("k")
       .agg(expr("graft_bloom_agg(xxhash64(k), CAST(4096 AS BIGINT))").as("bf"))
@@ -70,8 +64,13 @@ class BloomPruneSpec extends SparkSpecBase {
     val b = (1L to 1000L).toDF("k").repartition(7)
       .agg(expr("graft_bloom_agg(xxhash64(k), CAST(4096 AS BIGINT))").as("bf"))
       .head().getAs[Array[Byte]]("bf")
+    val typed = (1L to 1000L).toDF("k").repartition(7)
+      .agg(bloomAgg(xxhash64(col("k")), 4096L).as("bf"))
+      .head().getAs[Array[Byte]]("bf")
     // bit-OR merge is commutative/associative: the built filter is
-    // partition-order independent — safe as a partial aggregate at scale
+    // partition-order independent — safe as a partial aggregate at scale;
+    // the typed constructor builds the same filter as the SQL name
     assert(java.util.Arrays.equals(a, b))
+    assert(java.util.Arrays.equals(a, typed))
   }
 }

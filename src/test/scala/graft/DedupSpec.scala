@@ -100,7 +100,7 @@ class DedupSpec extends SparkSpecBase {
     // ADVICE r5: sum(rep) over zero rows is NULL — a corpus with no
     // near-dup pairs must yield zero clusters, not a driver crash
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(DedupQueries.labelPropagate(empty).count() == 0L)
+    assert(DedupReference.labelPropagate(empty).count() == 0L)
   }
 
   test("simhash near-dup pairs all have hamming <= 3 and include planted copies") {

@@ -527,7 +527,6 @@ class EmbeddingSpec extends SparkSpecBase {
     // pair candidacy must equal the local predicate exactly, proving the
     // measurement above measures the engine's condition.
     import spark.implicits._
-    graft.functions.SketchExpressions.register(spark) // vec_dot for lshBuckets
     val slice = pairs.take(1000)
     val cor = slice.zipWithIndex.flatMap { case ((v, w), i) =>
       Seq((i.toLong * 2, v.toSeq), (i.toLong * 2 + 1, w.toSeq))

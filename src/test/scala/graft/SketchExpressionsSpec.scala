@@ -2,29 +2,31 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{SketchExpressions, TextFeatures}
+import graft.functions.SketchExpressions.{charRollingHash, minhashSig, simhash32, vecDot}
+import graft.functions.TextFeatures
 
 /** The native fused-loop sketch expressions must agree bit-for-bit with
-  * the higher-order-builtin formulations (which the DuckDB oracle mirrors).
+  * the higher-order-builtin formulations (which the DuckDB oracle
+  * mirrors), through both ways in: the typed constructors the queries
+  * call and the SQL names.
   */
 class SketchExpressionsSpec extends SparkSpecBase {
 
-  private def shingleHashes = {
-    SketchExpressions.register(spark)
+  private def shingleHashes =
     spark.read
       .parquet(s"$Sf0001/documents.parquet")
       .withColumn("ws", split(col("text"), " "))
       .withColumn("sh", expr(s"array_distinct(${TextFeatures.shinglesSpark("ws")})"))
-      .withColumn("hs", expr("transform(sh, t -> char_rolling_hash(t))"))
-  }
+      .withColumn("hs", transform(col("sh"), t => charRollingHash(t)))
 
   test("minhash_sig equals the builtin transform/array_min formulation") {
     val diff = shingleHashes
       .select(
+        minhashSig(col("hs")).as("typed"),
         expr("minhash_sig(hs)").as("native"),
         expr(TextFeatures.minhashSigSpark("hs")).as("builtin")
       )
-      .filter(col("native") =!= col("builtin"))
+      .filter(col("typed") =!= col("builtin") || col("native") =!= col("builtin"))
       .count()
     assert(diff == 0)
   }
@@ -32,16 +34,16 @@ class SketchExpressionsSpec extends SparkSpecBase {
   test("simhash32 equals the builtin nested-aggregate formulation") {
     val diff = shingleHashes
       .select(
+        simhash32(col("hs")).as("typed"),
         expr("simhash32(hs)").as("native"),
         expr(TextFeatures.simhashSpark("hs")).as("builtin")
       )
-      .filter(col("native") =!= col("builtin"))
+      .filter(col("typed") =!= col("builtin") || col("native") =!= col("builtin"))
       .count()
     assert(diff == 0)
   }
 
   test("vec_dot equals the builtin zip_with/aggregate fold bit-for-bit") {
-    graft.functions.SketchExpressions.register(spark)
     // adversarial doubles: mixed magnitudes where float addition order
     // matters — the native loop must reproduce the exact left-fold sum
     val vecs = spark
@@ -52,24 +54,25 @@ class SketchExpressionsSpec extends SparkSpecBase {
       )
     val diff = vecs
       .select(
+        vecDot(col("a"), col("b")).as("typed"),
         expr("vec_dot(a, b)").as("native"),
         expr("aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)").as("builtin")
       )
-      .filter(col("native") =!= col("builtin")) // exact double compare
+      // exact double compare
+      .filter(col("typed") =!= col("builtin") || col("native") =!= col("builtin"))
       .count()
     assert(diff == 0)
   }
 
   test("vec_dot is null on length mismatch, like zip_with null-padding") {
-    graft.functions.SketchExpressions.register(spark)
     val r = spark
       .sql("SELECT vec_dot(array(1.0d, 2.0d), array(1.0d, 2.0d, 3.0d)) AS d")
+      .select(col("d"), vecDot(expr("array(1.0d, 2.0d)"), expr("array(1.0d, 2.0d, 3.0d)")))
       .collect()(0)
-    assert(r.isNullAt(0))
+    assert(r.isNullAt(0) && r.isNullAt(1))
   }
 
   test("vec_dot is null when either array holds a null element, like the builtin fold") {
-    graft.functions.SketchExpressions.register(spark)
     // codegen path (whole-stage over a range) AND interpreted path (collect
     // of a literal select) must both poison to NULL, matching
     // aggregate(zip_with(...)) where acc + NULL = NULL (ADVICE r4).
@@ -83,12 +86,15 @@ class SketchExpressionsSpec extends SparkSpecBase {
     val r = spark.sql(sql).collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
     // and through a non-literal (codegen'd projection over parquet-less range)
+    val a = "array(CAST(id AS DOUBLE), IF(id = 2, CAST(NULL AS DOUBLE), 1.0d))"
     val rows = spark
       .range(4)
-      .selectExpr(
-        "vec_dot(array(CAST(id AS DOUBLE), IF(id = 2, CAST(NULL AS DOUBLE), 1.0d)), array(1.0d, 1.0d)) AS d"
+      .select(
+        expr(s"vec_dot($a, array(1.0d, 1.0d))").as("d"),
+        vecDot(expr(a), expr("array(1.0d, 1.0d)")).as("typed")
       )
       .collect()
+    assert(rows.forall(r => r.isNullAt(0) == r.isNullAt(1) && (r.isNullAt(0) || r.getDouble(0) == r.getDouble(1))))
     assert(rows.count(_.isNullAt(0)) == 1)
     assert(rows.filterNot(_.isNullAt(0)).map(_.getDouble(0)).sorted.sameElements(Array(1.0, 2.0, 4.0)))
   }

@@ -25,12 +25,11 @@ class StarContractSpec extends SparkSpecBase {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("star contraction ≡ label propagation on the real LSH pair graph") {
-    graft.functions.SketchExpressions.register(spark)
     val edges = DedupQueries.queries("d_minhash_lsh_pairs")(spark, Sf0001)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .localCheckpoint()
     val star = labelsOf(DedupQueries.starContract(edges))
-    val prop = labelsOf(DedupQueries.labelPropagate(edges))
+    val prop = labelsOf(DedupReference.labelPropagate(edges))
     assert(star == prop,
       s"star contraction diverges from label propagation on " +
         s"${(star.toSet -- prop.toSet).take(5)} vs ${(prop.toSet -- star.toSet).take(5)}")

@@ -156,7 +156,6 @@ class TextQueriesSpec extends SparkSpecBase {
   }
 
   test("mixture sampling: quota law, threshold semantics, sqrt re-weighting") {
-    graft.functions.CharRollingHash.register(spark)
     val out = TextQueries.queries("t_mixture_sampling")(spark, Sf0001).collect()
     assert(out.nonEmpty)
     val nBySource = out.map(r => r.getAs[String]("source") -> r.getAs[Long]("n_s")).toMap

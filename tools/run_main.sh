@@ -15,5 +15,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS+=(--add-opens "java.base/$p=ALL-UNNAMED")
 done
 exec java "${ADD_OPENS[@]}" "$XMX" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dspark.ui.enabled=false \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -49,7 +49,7 @@ for NAMEFILE in "$@"; do
   # [verify] lines to the shared log.
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
   java "${ADD_OPENS[@]}" "-Xmx${SPARK_DRIVER_MEM:-24g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+    -Dspark.ui.enabled=false \
     -cp "$SNAP:/opt/spark/jars/*" graft.Verify "$SF" "$OUT/$B" "$NAMES" \
     2>&1 | tee "$OUT/$B.engine.log" | grep "\[verify\]" | tee -a "$OUT/sweep.log"
   echo "=== batch $B: oracle start $(date +%T) ===" | tee -a "$OUT/sweep.log"
