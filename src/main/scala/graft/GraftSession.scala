@@ -11,9 +11,11 @@ import org.apache.spark.sql.SparkSession
   *   - `spark.sql.legacy.parquet.nanosAsLong=true`: events.parquet may
   *     carry TIMESTAMP(NANOS), which Spark 4 refuses otherwise; set at
   *     startup, never as a side effect of building a query.
-  *   - `spark.sql.extensions=graft.plans.GraftExtensions`: the engine's
-  *     SQL function names in every session.
   *   - shuffle partitions = cores, UI off.
+  *
+  * The engine's own operators need nothing here: native expressions come
+  * from `SketchExpressions`' typed constructors, and `GroupedTopK.topK`
+  * adds its planner strategy to whichever session it runs in.
   */
 object GraftSession {
   def local(cpus: Int): SparkSession = {
@@ -25,7 +27,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

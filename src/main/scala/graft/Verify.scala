@@ -3,12 +3,16 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private[graft] val Usage =
+    "usage: graft.Verify <sfDir> <outDir> | graft.Verify <sfDir> <outDir> <query>[,<query>...]"
+
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated query names — dump only those
     // (local tooling; the driver always passes exactly two args).
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, q) => (s, o, Some(q.split(',').toSet))
+      case _ => throw new IllegalArgumentException(Usage)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)

@@ -17,9 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(n) loop over the UTF8String bytes with no allocation, and
   * `doGenCode` keeps it inside whole-stage codegen.
   *
-  * Query code builds it with `SketchExpressions.charRollingHash(col)`;
-  * SQL reaches it by its `prettyName` through
-  * `SketchExpressions.registrations`.
+  * Query code builds it with `SketchExpressions.charRollingHash(col)`.
   */
 case class CharRollingHash(child: Expression) extends UnaryExpression {
 

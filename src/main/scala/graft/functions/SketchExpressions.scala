@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.shims.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
@@ -428,18 +427,10 @@ case class CountInSet(child: Expression, set: IndexedSeq[UTF8String])
 }
 
 
-/** The engine's native expressions, two ways in.
-  *
-  * Query code calls the typed constructors: each wraps the expression
-  * around its argument columns, so a plan never looks a function up by
-  * name and needs no registration in the session that runs it.
-  *
-  * SQL callers (`expr(...)`, `spark.sql`) resolve the same expressions by
-  * name through [[registrations]], the one list of
-  * `(identifier, info, builder)` triples; `graft.plans.GraftExtensions`
-  * injects it into every session built with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (as
-  * `graft.GraftSession` does).
+/** The engine's native expressions, one way in: typed `Column`
+  * constructors. Each wraps the expression around its argument columns,
+  * so Catalyst analyzes it directly, a plan never looks a function up by
+  * name, and the session that runs it needs no registration.
   *
   * `bloomAgg`/`mightContain` expose Spark's runtime-filter bloom
   * expressions, which Catalyst uses for its own AQE runtime filters but
@@ -468,8 +459,9 @@ object SketchExpressions {
     column(CountInSet(expression(ws), set.map(UTF8String.fromString).toIndexedSeq))
 
   /** Bloom filter (BINARY) over a BIGINT column, sized for `est` items
-    * at 8 bits each, as the SQL form's two-argument builder sizes it (the
-    * `Long` constructor would size for a target false-positive rate).
+    * at 8 bits each. `est` goes in as a `Literal`: the `Long`
+    * constructor would size for a target false-positive rate and build a
+    * different filter (BloomPruneSpec pins the bit size).
     */
   def bloomAgg(c: Column, est: Long): Column =
     column(new BloomFilterAggregate(expression(c), Literal(est)).toAggregateExpression())
@@ -479,45 +471,4 @@ object SketchExpressions {
     */
   def mightContain(bf: Column, c: Column): Column =
     column(BloomFilterMightContain(expression(bf), expression(c)))
-
-  private def fn(name: String, cls: Class[_])(builder: Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
-
-  /** Every SQL name, with the checks a SQL argument list needs and the
-    * typed constructors get from their signatures.
-    */
-  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(
-      fn("char_rolling_hash", classOf[CharRollingHash])(c => CharRollingHash(c.head)),
-      fn("minhash_sig", classOf[MinHashSig])(c => MinHashSig(c.head)),
-      fn("simhash32", classOf[SimHash32])(c => SimHash32(c.head)),
-      fn("vec_dot", classOf[VecDot])(c => VecDot(c(0), c(1))),
-      fn("word_ngram_hashes", classOf[WordNgramHashes])(c =>
-        c(1) match {
-          case Literal(n: Int, _) => WordNgramHashes(c(0), n)
-          case other =>
-            throw new IllegalArgumentException(
-              s"word_ngram_hashes: n must be an INT literal, got $other")
-        }),
-      fn("count_in_set", classOf[CountInSet]) { c =>
-        val setExpr = c(1)
-        require(setExpr.foldable,
-          s"count_in_set: the set must be a literal string array, got $setExpr")
-        val arr = setExpr.eval().asInstanceOf[ArrayData]
-        val set = (0 until arr.numElements()).map { i =>
-          require(!arr.isNullAt(i), "count_in_set: set elements must be non-null")
-          arr.getUTF8String(i).clone()
-        }
-        CountInSet(c.head, set)
-      },
-      fn("graft_bloom_agg", classOf[BloomFilterAggregate]) {
-        case Seq(c) => new BloomFilterAggregate(c)
-        case Seq(c, est) => new BloomFilterAggregate(c, est)
-        case other =>
-          throw new IllegalArgumentException(
-            s"graft_bloom_agg expects 1 or 2 args, got ${other.size}")
-      },
-      fn("graft_might_contain", classOf[BloomFilterMightContain])(c =>
-        BloomFilterMightContain(c(0), c(1)))
-    )
 }

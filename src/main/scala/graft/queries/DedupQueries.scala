@@ -493,26 +493,8 @@ object DedupQueries {
     * ∪ exact copies of every 7th corpus doc (+3000000) ∪ 2-word-truncated
     * near copies of every 11th corpus doc (+4000000) ∪ exact copies of
     * every 13th raw batch doc (+5000000).
-    *
-    * A/B instrument (unset in production and never set by the driver —
-    * same contract as SPARK_GRAFT_OVERLAP_KNOBS):
-    * SPARK_GRAFT_DIX_BATCH_MOD=<m> keeps only batch docs with
-    * doc_id % m == 0 against the UNCHANGED corpus, so a probe's cost can
-    * be measured as a function of batch size alone — the direct
-    * experiment behind the "probe is O(batch), not O(corpus)" claim
-    * (sf10 numbers in BASELINE.md round 12).
     */
   private[graft] def incBatch(s: SparkSession, dir: String): DataFrame = {
-    val batchMod = sys.env.get("SPARK_GRAFT_DIX_BATCH_MOD").map { v =>
-      require(v.matches("""[1-9]\d*"""),
-        s"SPARK_GRAFT_DIX_BATCH_MOD must be a positive integer, got: '$v'")
-      v.toLong
-    }
-    val full = incBatchFull(s, dir)
-    batchMod.fold(full)(m => full.filter(col("doc_id") % m === 0))
-  }
-
-  private def incBatchFull(s: SparkSession, dir: String): DataFrame = {
     // The plant's +3000000/+4000000/+5000000 id offsets assume corpus
     // ids stay below 3,000,000 (holds through ~sf100); past that, batch
     // membership predicates (engine AND oracle) would silently
@@ -553,8 +535,7 @@ object DedupQueries {
     * append deltas (dxd), compaction clone + audit (dxc), streaming-
     * ingest deltas + marker (dsi). A base rebuild or an orphan sweep
     * (corpus tag changed) must drop ALL of them — a derived table
-    * surviving its base is the stale-reuse contamination class ADVICE
-    * r12 flagged on the batch-mod knob.
+    * surviving its base is stale reuse (ADVICE r12).
     */
   private[graft] val DixPrefixes = Seq(
     "graft_dix_doc_", "graft_dix_band_",
@@ -758,15 +739,6 @@ object DedupQueries {
     */
   private[graft] def ensureDedupAppended(
       s: SparkSession, dir: String): (String, String, String, String) = {
-    // SPARK_GRAFT_DIX_BATCH_MOD is a PROBE-only A/B instrument: letting
-    // it reach an append would persist a filtered delta that later
-    // knob-free runs silently reuse through the ingest-once
-    // (table-exists) marker — the exact contamination class the slice
-    // knob's _sl<m> tag suffix exists to prevent (ADVICE r12).
-    require(sys.env.get("SPARK_GRAFT_DIX_BATCH_MOD").isEmpty,
-      "SPARK_GRAFT_DIX_BATCH_MOD drives the read-only d_index_probe A/B only; " +
-        "an append under it would persist a filtered delta that knob-free runs " +
-        "reuse via the ingest-once marker. Unset it before d_index_append.")
     val (docT, bandT) = dedupIndexTables(s, dir, rebuild = false)
     val tag = OperatorQueries.sourceTag(s, s"$dir/documents.parquet")
     val dDocT = s"graft_dxd_doc_$tag"
@@ -1149,8 +1121,7 @@ object DedupQueries {
     // as d_incremental_dedup; DedupIndexSpec asserts probe ≡ inline
     // verdicts and that the base store's files are byte-identical after
     // a probe. Measured batch-scaling at sf10 (warm store, 16 cores,
-    // SPARK_GRAFT_DIX_BATCH_MOD shrinking the batch against the fixed
-    // corpus): 14 s at the full 201k-doc batch → 7.7 s at 1/8 → 5.6 s at
+    // the batch shrunk against the fixed corpus): 14 s at the full 201k-doc batch → 7.7 s at 1/8 → 5.6 s at
     // 1/40, converging on the ~5 s narrow index-READ floor — while the
     // inline query re-pays the ~21 s corpus feature pass at any batch
     // size (BASELINE.md round 12).

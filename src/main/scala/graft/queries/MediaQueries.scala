@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Media
 
-/** Driver registrations for the multimodal tier. Image blobs are REAL
+/** Registered queries for the multimodal tier. Image blobs are REAL
   * PNGs decoded with `javax.imageio` (pixels = the doc's text bytes
   * extended cyclically); audio blobs are REAL 8-bit PCM WAVs decoded
   * with `javax.sound.sampled` (PCM = the doc's text bytes); video blobs

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SketchExpressions.{bloomAgg, mightContain}
 import graft.operators.{AsOfJoin, RangeJoin, Salting}
 
-/** Driver-visible registrations of the scale-tier join operators
+/** Registered queries over the scale-tier join operators
   * (VERDICT r3 "What's missing" #2 — `Salting.saltedJoin` and the
   * bucketed fact-fact join were real and unit-tested but invisible to a
   * driver reading only CORRECTNESS_r*.json).
@@ -46,15 +46,8 @@ object OperatorQueries {
       len += f.getLen
       mtime = math.max(mtime, f.getModificationTime)
     }
-    // A sliced run (SPARK_GRAFT_SLICE, see Q.table) must not share cached
-    // warehouse copies with full-corpus runs — the slice is part of the
-    // source identity.
-    val slice = Q.sliceMod.map {
-      case (m, 0L) => s"_sl$m" // r11-compatible tag for the k = 0 form
-      case (m, k) => s"_sl${m}r$k"
-    }.getOrElse("")
     java.lang.Integer.toHexString(path.hashCode) + "_" +
-      java.lang.Long.toHexString(len) + "_" + java.lang.Long.toHexString(mtime) + slice
+      java.lang.Long.toHexString(len) + "_" + java.lang.Long.toHexString(mtime)
   }
 
   /** The date-partitioned events table ("partition once, prune many"),
@@ -241,30 +234,11 @@ object OperatorQueries {
       // change the result set, only the straggler profile
       // (RangeJoinSpec asserts auto ≡ hand).
       val knobs = RangeJoin.tuneKnobs(iv, "s", "e")
-      // A/B instrument (unset in production — the tuned knobs are the
-      // default): SPARK_GRAFT_OVERLAP_KNOBS="<widthMicros>,<salt>" pins
-      // the knobs so a same-day, same-host run can price auto vs hand
-      // values against each other — the only honest way to separate
-      // tuner effect from this host's documented multi-minute stall
-      // drift. Results are knob-independent either way (RangeJoinSpec).
-      val (kWidth, kSalt) = sys.env.get("SPARK_GRAFT_OVERLAP_KNOBS") match {
-        case Some(v) =>
-          v.split(',') match {
-            case Array(w, k)
-                if w.trim.matches("""[1-9]\d*""") && k.trim.matches("""[1-9]\d*""") =>
-              (w.trim.toLong, k.trim.toInt)
-            case _ =>
-              throw new IllegalArgumentException(
-                s"SPARK_GRAFT_OVERLAP_KNOBS must be '<widthMicros>,<salt>' " +
-                  s"(two positive integers), got: '$v'")
-          }
-        case None => (knobs.bucketWidth, knobs.saltFactor)
-      }
       RangeJoin
         .overlapJoin(l, r, "s1", "e1", "s2", "e2",
-          bucketWidth = kWidth,
+          bucketWidth = knobs.bucketWidth,
           extraCond = Some(col("u1") < col("u2")),
-          saltFactor = kSalt)
+          saltFactor = knobs.saltFactor)
         .select(
           (col("u1") % 64).as("bucket"),
           call_function(

@@ -9,42 +9,8 @@ object Q {
   /** A registered query: (session, sf-dir) → result. */
   type Fn = (SparkSession, String) => DataFrame
 
-  /** Deterministic source-table slice for slice-oracle sweeps (VERDICT
-    * r11 #3): SPARK_GRAFT_SLICE=<m> restricts `documents` to
-    * doc_id % m == 0 and `embeddings` to vec_id % m == 0 AT THE SCAN, so
-    * every registered query — and every plant derived from these tables —
-    * runs over the same 1/m subcorpus that the oracle's sliced DuckDB
-    * views see (check_oracle.py ORACLE_SLICE=<m>). The deliberately-exact
-    * mirror families (Σdf² pair replay, n² all-pairs, n×k assignment)
-    * become DuckDB-tractable at sf10 on the slice, converting their
-    * TIMEOUT family classification into direct hash evidence. Only these
-    * two id-keyed corpora are sliced — the TPC-H-shape tables carry
-    * referential integrity across joins and are never filtered.
-    */
-  private[graft] lazy val sliceMod: Option[(Long, Long)] =
-    sys.env.get("SPARK_GRAFT_SLICE").map { v =>
-      // <m> keeps id % m == 0 (the r11 slice form); <m>:<k> keeps
-      // id % m == k — the SHARD form (VERDICT r13 #6): running all k in
-      // 0..m-1 covers the FULL corpus as m disjoint shards, so a mirror
-      // that is linear-per-row but over the sweep cap in one piece
-      // (codec replay) yields full-corpus evidence as m under-cap runs.
-      require(v.matches("""[1-9]\d*(:\d+)?"""),
-        s"SPARK_GRAFT_SLICE must be <m> or <m>:<k>, got: '$v'")
-      val parts = v.split(':')
-      val m = parts(0).toLong
-      val k = if (parts.length > 1) parts(1).toLong else 0L
-      require(k < m, s"SPARK_GRAFT_SLICE shard $k must be < modulus $m")
-      (m, k)
-    }
-  private val sliceKey = Map("documents" -> "doc_id", "embeddings" -> "vec_id")
-
-  def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/$name.parquet")
-    (sliceMod, sliceKey.get(name)) match {
-      case (Some((m, k)), Some(c)) => raw.filter(col(c) % m === k)
-      case _ => raw
-    }
-  }
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"$dir/$name.parquet")
 
   /** Cached per-(dir, table) row count, for plan-SIZING decisions (LSH bit
     * widths, IVF centroid counts). The embedding queries each need the
@@ -110,7 +76,7 @@ object Q {
     * naive-timestamp reading byte-for-byte (confirmed by the r7 sf0.01
     * oracle sweep, 109/0). If any session ever un-pins UTC, that
     * coercion — and this whole oracle-parity scheme — breaks; the UTC
-    * pin in Bench/Verify/SparkSpecBase is load-bearing, not cosmetic.
+    * pin in `graft.GraftSession` is load-bearing, not cosmetic.
     */
   def events(s: SparkSession, dir: String): DataFrame =
     normalizeEventTs(table(s, dir, "events"))

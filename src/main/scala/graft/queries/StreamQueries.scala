@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.EventPipeline
 
-/** Batch registrations of the streaming-tier operators over `events`
+/** Batch queries over the streaming-tier operators on `events`
   * (SURVEY.md §2.10): the same transforms run under `readStream` in
   * `EventPipeline`; here they run in batch so the DuckDB oracle can check
   * them (streaming and batch share one logical plan by construction —

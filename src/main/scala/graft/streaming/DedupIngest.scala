@@ -252,11 +252,6 @@ object DedupIngest {
       s: SparkSession, dir: String): (String, String) = {
     val (dDocT, dBandT, doneT, srcDir, ckptDir) = ingestLayout(s, dir)
     if (!s.catalog.tableExists(doneT)) {
-      // the knob contaminates persisted state exactly like an append
-      // under it would (see ensureDedupAppended's guard)
-      require(sys.env.get("SPARK_GRAFT_DIX_BATCH_MOD").isEmpty,
-        "SPARK_GRAFT_DIX_BATCH_MOD drives the read-only d_index_probe A/B only; " +
-          "unset it before d_stream_ingest.")
       val (docT, bandT) = DedupQueries.dedupIndexTables(s, dir, rebuild = false)
       Seq(dDocT, dBandT, doneT).foreach(OperatorQueries.dropManagedTable(s, _))
       deleteRecursively(ckptDir)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.SketchExpressions.{bloomAgg, mightContain}
 
@@ -58,19 +59,16 @@ class BloomPruneSpec extends SparkSpecBase {
 
   test("bloom aggregate merges across partitionings deterministically") {
     import spark.implicits._
-    val a = (1L to 1000L).toDF("k")
-      .agg(expr("graft_bloom_agg(xxhash64(k), CAST(4096 AS BIGINT))").as("bf"))
-      .head().getAs[Array[Byte]]("bf")
-    val b = (1L to 1000L).toDF("k").repartition(7)
-      .agg(expr("graft_bloom_agg(xxhash64(k), CAST(4096 AS BIGINT))").as("bf"))
-      .head().getAs[Array[Byte]]("bf")
-    val typed = (1L to 1000L).toDF("k").repartition(7)
-      .agg(bloomAgg(xxhash64(col("k")), 4096L).as("bf"))
-      .head().getAs[Array[Byte]]("bf")
+    def bloom(df: org.apache.spark.sql.DataFrame): Array[Byte] =
+      df.agg(bloomAgg(xxhash64(col("k")), 4096L).as("bf")).head().getAs[Array[Byte]]("bf")
+    val a = bloom((1L to 1000L).toDF("k"))
+    val b = bloom((1L to 1000L).toDF("k").repartition(7))
     // bit-OR merge is commutative/associative: the built filter is
-    // partition-order independent — safe as a partial aggregate at scale;
-    // the typed constructor builds the same filter as the SQL name
+    // partition-order independent — safe as a partial aggregate at scale
     assert(java.util.Arrays.equals(a, b))
-    assert(java.util.Arrays.equals(a, typed))
+    // sized at 8 bits per expected item; the FPP-sizing `Long`
+    // constructor gives 88640 bits for 4096 items
+    val bits = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a)).bitSize()
+    assert(bits == 4096L * 8, s"bloom has $bits bits")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.SketchExpressions.charRollingHash
 import graft.queries.TextQueries
 
 /** Invariants for the TF-IDF and decontamination operators on sf0.001. */
@@ -156,6 +157,7 @@ class TextQueriesSpec extends SparkSpecBase {
   }
 
   test("mixture sampling: quota law, threshold semantics, sqrt re-weighting") {
+    import org.apache.spark.sql.functions._
     val out = TextQueries.queries("t_mixture_sampling")(spark, Sf0001).collect()
     assert(out.nonEmpty)
     val nBySource = out.map(r => r.getAs[String]("source") -> r.getAs[Long]("n_s")).toMap
@@ -164,7 +166,7 @@ class TextQueriesSpec extends SparkSpecBase {
     // reimplement: quota law + threshold prefilter + rank-take, driver-side
     val hashed = spark.read
       .parquet(s"$Sf0001/documents.parquet")
-      .selectExpr("doc_id", "source", "n_chars", "char_rolling_hash(text) AS h")
+      .select(col("doc_id"), col("source"), col("n_chars"), charRollingHash(col("text")).as("h"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     out.foreach { r =>

@@ -56,26 +56,6 @@ def connect(sf_dir):
     con.execute(f"SET memory_limit='{mem}'")
     os.makedirs(tmp, exist_ok=True)
     con.execute(f"SET temp_directory='{tmp}'")
-    # ORACLE_SLICE=<m> (slice-oracle mode, VERDICT r11 #3): restrict the
-    # id-keyed corpora to id % m == 0, mirroring the engine's
-    # SPARK_GRAFT_SLICE=<m> scan filter — the deliberately-exact mirror
-    # families become tractable at sf10 on the 1/m slice, so the same
-    # per-query SQL yields a direct hash comparison instead of a
-    # family-tagged TIMEOUT. Run slice sweeps WITHOUT ORACLE_PRECLASSIFY
-    # (preclassification would skip exactly the mirrors the slice exists
-    # to run).
-    # <m> keeps id % m == 0; <m>:<k> keeps id % m == k (shard form —
-    # VERDICT r13 #6: m disjoint shards union to full-corpus evidence
-    # for linear-per-row mirrors that exceed the cap in one piece).
-    slice_m = os.environ.get("ORACLE_SLICE")
-    if slice_m is not None and not re.fullmatch(r"[1-9][0-9]*(:[0-9]+)?", slice_m):
-        sys.exit(f"ORACLE_SLICE={slice_m!r} must be <m> or <m>:<k>")
-    slice_k = "0"
-    if slice_m and ":" in slice_m:
-        slice_m, slice_k = slice_m.split(":")
-        if int(slice_k) >= int(slice_m):
-            sys.exit(f"ORACLE_SLICE shard {slice_k} must be < modulus {slice_m}")
-    slice_keys = {"documents": "doc_id", "embeddings": "vec_id"}
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         src = None
@@ -85,9 +65,7 @@ def connect(sf_dir):
             src = f"read_parquet('{p}')"
         if src is None:
             continue
-        where = (f" WHERE {slice_keys[t]} % {slice_m} = {slice_k}"
-                 if slice_m and t in slice_keys else "")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}{where}")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
     return con
 
 def load_preclassified():

@@ -7,18 +7,6 @@ tools/mirror_families.txt (VERDICT r10 #4), and a TIMEOUT whose query is
 NOT in that taxonomy fails the summary (exit 2): every over-cap mirror
 must be classified — "deliberately exact" as unchecked prose is how two
 fixable plan bugs hid through round 9.
-
-Optional second arg (VERDICT r11 #3): a SLICE sweep log — the same
-check_oracle output produced with SPARK_GRAFT_SLICE / ORACLE_SLICE set,
-where the deliberately-exact mirrors run to completion on a 1/m
-subcorpus. Each TIMEOUT row whose query hash-PASSED in the slice log is
-annotated SLICE-PASS (direct evidence, not just family classification).
-A slice FAIL/ERR/MISS — wrong or broken results — fails the summary
-(exit 3). A slice row that is merely absent, SKIPped, or itself
-timed-out is an evidence GAP, annotated and counted in one warning line
-but not fatal (family classification still stands for those rows; a gap
-must never be surfaced as weaker than an explicit non-PASS, or deleting
-a row would beat reporting it).
 """
 import sys, re, os
 
@@ -49,50 +37,24 @@ def parse_rows(text):
 log = open(sys.argv[1]).read()
 fams = load_families()
 rows = parse_rows(log)
-slice_rows = parse_rows(open(sys.argv[2]).read()) if len(sys.argv) > 2 else None
 counts = {}
 for status, _ in rows.values():
     counts[status] = counts.get(status, 0) + 1
 print(f"total {len(rows)}: {counts}")
 unclassified = []
-slice_failed = []
-slice_gaps = []
 for st in ("FAIL", "ERR", "MISS", "ABSENT", "TIMEOUT", "SKIP"):
     for n, (s, r) in sorted(rows.items()):
         if s != st:
             continue
         if st == "TIMEOUT":
             fam = fams.get(n)
-            tags = []
             if fam is None:
                 unclassified.append(n)
-                tags.append("family: UNCLASSIFIED — EXPLAIN the mirror and add to mirror_families.txt")
-            else:
-                tags.append(f"family: {fam}")
-            if slice_rows is not None:
-                ss = slice_rows.get(n)
-                if ss is None:
-                    slice_gaps.append(n)
-                    tags.append("SLICE-GAP (no slice row)")
-                elif ss[0] == "PASS":
-                    tags.append(f"SLICE-PASS {ss[1]}")
-                elif ss[0] in ("FAIL", "ERR", "MISS"):
-                    slice_failed.append(n)
-                    tags.append(f"SLICE-{ss[0]} {ss[1]}")
-                else:  # SKIP / TIMEOUT / ABSENT: evidence gap, not a wrong result
-                    slice_gaps.append(n)
-                    tags.append(f"SLICE-GAP ({ss[0]}) {ss[1]}")
-            print(f"  TIMEOUT {n} [{'; '.join(tags)}] {r}")
+                fam = "UNCLASSIFIED — EXPLAIN the mirror and add to mirror_families.txt"
+            print(f"  TIMEOUT {n} [family: {fam}] {r}")
         else:
             print(f"  {st} {n} {r}")
-if slice_gaps:
-    print(f"\nWARNING: {len(slice_gaps)} TIMEOUT row(s) without slice evidence "
-          f"(family classification only): {' '.join(slice_gaps)}")
 if unclassified:
     print(f"\nERROR: {len(unclassified)} TIMEOUT row(s) without a documented "
           f"mirror family: {' '.join(unclassified)}")
     sys.exit(2)
-if slice_failed:
-    print(f"\nERROR: {len(slice_failed)} TIMEOUT row(s) whose SLICE oracle "
-          f"returned wrong/broken results: {' '.join(slice_failed)}")
-    sys.exit(3)
